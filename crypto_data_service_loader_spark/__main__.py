@@ -2,7 +2,8 @@
 
     python -m crypto_data_service_loader_spark run \
         --root /data/ticks --registry /data/_registry [--config engine.yaml]
-        [--cycles N] [--today YYYY-MM-DD] [--sink parquet:/data/out]
+        [--cycles N] [--today YYYY-MM-DD]
+        [--sink parquet:/data/out | http:http://host:8123|tickers_data]
 
 Runs service cycles (discover -> progress -> upload -> cleanup) against a
 dir-per-day tree, mirroring application.origin.yaml's flow scheduling with
@@ -30,7 +31,8 @@ def main(argv: list[str] | None = None) -> int:
     runp.add_argument("--root", required=True, help="dir-per-day data tree")
     runp.add_argument("--registry", required=True, help="registry event-log path")
     runp.add_argument("--sink", default=None,
-                      help="parquet:<path> | idempotent:<path> | jdbc:<url>|<table> "
+                      help="parquet:<path> | idempotent:<path> | "
+                           "http:<url>|<table> | jdbc:<url>|<table> "
                            "(default: idempotent:<root>_out)")
     runp.add_argument("--config", default=None, help="YAML config (optional)")
     runp.add_argument("--cycles", type=int, default=1)
@@ -171,6 +173,13 @@ def main(argv: list[str] | None = None) -> int:
         sink = IdempotentParquetSink(sink_spec.split(":", 1)[1])
     elif sink_spec.startswith("parquet:"):
         sink = ParquetSink(sink_spec.split(":", 1)[1])
+    elif sink_spec.startswith("http:"):
+        from .sinks.clickhouse_http import ClickHouseHttpSink
+
+        url, table = sink_spec.split(":", 1)[1].rsplit("|", 1)
+        sink = ClickHouseHttpSink(url=url, table=table,
+                                  attempts=cfg.ingest.max_flush_data_attempts,
+                                  sleep_sec=cfg.ingest.sleep_on_reconnect_ms / 1000)
     elif sink_spec.startswith("jdbc:"):
         url, table = sink_spec.split(":", 1)[1].rsplit("|", 1)
         sink = ClickHouseJdbcSink(url=url, table=table,

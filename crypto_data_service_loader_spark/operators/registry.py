@@ -159,15 +159,6 @@ def sort_by_filename(df: DataFrame) -> DataFrame:
     return df.orderBy("filename")
 
 
-def bundle_split(df: DataFrame, n: int = 32) -> DataFrame:
-    """O15 — contiguous filename bundles, one per upload task.
-
-    repartitionByRange keeps the filename-contiguity the reference gets from
-    sort + Lists.partition (TickersDataLoader.java:62-69).
-    """
-    return df.repartitionByRange(n, "filename")
-
-
 def upload_status_rollup(part_results: DataFrame) -> DataFrame:
     """O19 — per-file FINISHED/ERROR from per-part upload outcomes.
 

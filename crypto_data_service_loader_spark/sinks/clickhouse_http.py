@@ -7,16 +7,19 @@ CompressionHandler.java:48-111 feeds it buffered gzip'd CSV lines. On the
 wire that is `POST /?query=INSERT%20INTO%20t%20FORMAT%20CSV` with a
 `Content-Encoding: gzip` body — plain HTTP, no driver jar needed.
 
-Spark-first shape: `df.mapInArrow` — each of the `num_partitions` output
-partitions (32 mirrors the reference's `divideDataPartsQuantity`) renders
-its rows to CSV lines JVM-side (whole-stage codegen, trailing newline
-included), so the newline-joined POST payload is *exactly the Arrow string
-column's data buffer* — assembled zero-copy from buffer offsets, no pandas
-conversion, no per-row Python strings — then gzips and POSTs straight
-from the executor. The driver never materializes or relays the data, so
-throughput scales with executors, exactly like adding CompressionHandler
-threads — except distributed. Per-chunk retry mirrors the reference's
-`maxFlushDataAttempts=3` / `sleepOnReconnectMs=500`
+Spark-first shape: `df.mapInArrow` straight over the input partitions — no
+shuffle. By default the partitions are narrowed (`coalesce`) to a count
+derived from the optimized plan's size estimate: one POST per
+`POST_TARGET_BYTES`, at most one per core (the reference instead splits
+every load into a fixed `divideDataPartsQuantity` of 32 bundles). Each
+partition renders its rows to CSV lines JVM-side (whole-stage codegen,
+trailing newline included), so the newline-joined POST payload is
+*exactly the Arrow string column's data buffer* — assembled zero-copy from
+buffer offsets, no pandas conversion, no per-row Python strings — then
+gzips and POSTs straight from the executor. The driver never materializes
+or relays the data, so throughput scales with executors, exactly like
+adding CompressionHandler threads — except distributed. Per-chunk retry
+mirrors the reference's `maxFlushDataAttempts=3` / `sleepOnReconnectMs=500`
 (application.origin.yaml:15,18) at finer granularity (a chunk, not the
 whole insert, is retried).
 
@@ -48,6 +51,21 @@ from pyspark.sql import DataFrame, functions as F
 from .writers import Sink
 
 logger = logging.getLogger(__name__)
+
+#: estimated input bytes per POST under the size-derived partition count:
+#: ClickHouse favours few large inserts, and 8 MiB of ticks (~100k rows)
+#: stays one Arrow batch, so one partition is one POST
+POST_TARGET_BYTES = 8 << 20
+
+
+def post_partitions(df: DataFrame) -> int:
+    """POSTing tasks for `df`: ceil(estimated bytes / POST_TARGET_BYTES),
+    capped at `defaultParallelism`, at least 1. The estimate is the
+    optimized plan's `sizeInBytes` — planned on the driver, no Spark job."""
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return max(1, min(cores, -(-est // POST_TARGET_BYTES)))
+
 
 def _csv_line(df: DataFrame) -> DataFrame:
     """Render each row to its CSV wire line JVM-SIDE (whole-stage codegen):
@@ -141,13 +159,12 @@ class ClickHouseHttpSink(Sink):
 
     url: str  # e.g. http://host:8123  (database via ?database= on the url)
     table: str
-    #: None = post straight from the input partitioning (no shuffle) — the
-    #: 100 TB shape: one task per upstream split, each streaming its own
-    #: chunks; an int mirrors the reference's fixed 32-bundle split
-    #: (divideDataPartsQuantity) via a round-robin repartition, right when
-    #: the upstream partitioning is skewed or far wider than the server's
-    #: useful insert concurrency
-    num_partitions: int | None = 32
+    #: None = post from the input partitioning (no shuffle), narrowed to
+    #: `post_partitions(df)`; an int round-robin repartitions to exactly
+    #: that many POSTing tasks (the reference's fixed bundle split,
+    #: divideDataPartsQuantity), right when the upstream partitioning is
+    #: skewed
+    num_partitions: int | None = None
     attempts: int = 3  # reference maxFlushDataAttempts: 3
     sleep_sec: float = 0.5  # reference sleepOnReconnectMs: 500
     gzip_level: int = 6
@@ -161,9 +178,9 @@ class ClickHouseHttpSink(Sink):
 
     # -- bulk write (the hot path) ------------------------------------------
     def write(self, df: DataFrame, batch_id: int | None = None) -> int:
-        """Bulk-insert `df` as gzip'd CSV chunks, one POST per partition.
-        Returns rows sent (the count rides back on the mapInArrow output —
-        no second pass over the data)."""
+        """Bulk-insert `df` as gzip'd CSV chunks, one POST per partition
+        chunk. Returns rows sent (the counts ride back on the mapInArrow
+        output, one row per chunk — no second pass over the data)."""
         if self.send_batch_id and batch_id is not None:
             df = df.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
         # close over plain values: executors must not pickle the sink/df
@@ -235,27 +252,21 @@ class ClickHouseHttpSink(Sink):
         spark.conf.set(key, "200000")
         t0 = time.perf_counter()
         try:
-            lines = _csv_line(df)
-            if self.num_partitions is not None:
-                lines = lines.repartition(self.num_partitions)
-            agg = (
-                lines
-                .mapInArrow(_send, schema=(
-                    "rows_sent long, bytes_raw long, bytes_gz long"
-                ))
-                .agg(
-                    F.sum("rows_sent").alias("n"),
-                    F.sum("bytes_raw").alias("raw"),
-                    F.sum("bytes_gz").alias("gz"),
-                )
-                .first()
-            )
+            if self.num_partitions is None:
+                lines = _csv_line(df).coalesce(post_partitions(df))
+            else:
+                lines = _csv_line(df).repartition(self.num_partitions)
+            # one row per POSTed chunk: bounded by partitions x chunks, so
+            # the counters are summed on the driver — one job, no exchange
+            chunks = lines.mapInArrow(_send, schema=(
+                "rows_sent long, bytes_raw long, bytes_gz long"
+            )).collect()
         finally:
             if prev is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, prev)
-        sent, raw, gz = int(agg["n"] or 0), int(agg["raw"] or 0), int(agg["gz"] or 0)
+        sent, raw, gz = (sum(c[i] for c in chunks) for i in range(3))
         elapsed = time.perf_counter() - t0
         # reference formLoggingData parity (CompressionHandler.java:113-134):
         # "Compression of X MB of data with rate Y MB/sec finished in Z sec"

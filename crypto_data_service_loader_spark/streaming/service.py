@@ -21,6 +21,7 @@ from __future__ import annotations
 import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.localrel import local_values_df
@@ -292,10 +293,13 @@ def run_cycle(
 
     def scan_or_empty() -> DataFrame:
         # an empty/missing tree is a quiet cycle, not a failure (the
-        # reference falls back and retries, SaveNewFilesToDbFlow.java:139-163)
+        # reference falls back and retries, SaveNewFilesToDbFlow.java:139-163);
+        # any other error (permissions, a broken filesystem) raises
         try:
             return scan_directory(spark, root)  # load() lists eagerly
-        except Exception:  # noqa: BLE001
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
             return local_values_df(
                 spark, [], "filename string, create_date date, status string"
             )
@@ -369,9 +373,12 @@ def run_cycle(
             F.col("sink_batch").cast("long").alias("batch_id"),
         )
     )
-    # outcomes is a small driver-built DataFrame; counting it is trivial
-    stats["uploaded"] = outcomes.filter("ok").count()
-    stats["failed"] = outcomes.filter("NOT ok").count()
+    # one claim-sized aggregate for both counters
+    counts = outcomes.agg(
+        F.count_if(F.col("ok")).alias("uploaded"),
+        F.count_if(~F.col("ok")).alias("failed"),
+    ).first()
+    stats["uploaded"], stats["failed"] = counts["uploaded"], counts["failed"]
 
     # 4. cleanup (reference Flow 4), gated like the reference's 3 h cycle
     if do_cleanup:

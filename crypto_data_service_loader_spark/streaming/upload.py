@@ -4,18 +4,22 @@ Reference: claim READY_FOR_PROCESSING files (optimistic IN_PROGRESS update),
 group by date, join against disk, sort, split into 32 bundles, stream GZIP
 CSV into ClickHouse, then per-bundle FINISHED/ERROR rollup.
 
-Spark-first batch composition (`run_upload_batch`): the claim/sort/split
-become registry transforms + `repartitionByRange`; compression/pipelining
-belong to the sink transport; per-file success tracking uses
-`input_file_name()` lineage with a try/except per file-group inside the
-batch (finer than the reference's per-bundle ERROR granularity).
+Spark-first batch composition (`run_upload_batch`): the claim becomes a
+registry transform; there is no sort and no bundle split — the sink POSTs
+straight from the CSV scan's partitions, with no shuffle between the scan
+and the POST (nothing downstream reads a row order: outcomes come from the
+directory listing) — and compression/pipelining belong to the sink
+transport. Per-file success tracking uses `input_file_name()` lineage with
+a try/except per file-group inside the batch (finer than the reference's
+per-bundle ERROR granularity).
 
 Scale contract: the claim set is NEVER collected on the driver. The hot
-path collects only two provably tiny sets — distinct claim DATES (bounded
-by the retention window's calendar days, not file count) and distinct sink
-batches (1 + number of crashed predecessor cycles). File selection happens
-distributed: glob the claimed dates' directories, then semi-join the scan's
-`input_file_name()` lineage against the claimed filenames.
+path collects one provably tiny set — the distinct (sink batch, claim
+DATE) pairs: batches are 1 + the number of crashed predecessor cycles,
+dates are bounded by the retention window's calendar days, not by file
+count. File selection happens distributed: glob the claimed dates'
+directories, then semi-join the scan's `input_file_name()` lineage against
+the claimed filenames.
 
 Exactly-once contract: every claimed file carries a `sink_batch` — the
 idempotence key its rows are written under. Fresh claims use the current
@@ -35,11 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.localrel import local_values_df
 
 from ..functions.metrics import observe_counts, observed_metrics
-from ..operators.registry import (
-    bundle_split,
-    filter_status_in,
-    sort_by_filename,
-)
+from ..operators.registry import filter_status_in
 from ..sinks.writers import Sink
 from ..sources.csv_ingest import read_ticks_csv
 
@@ -113,7 +113,6 @@ def run_upload_batch(
     claimed: DataFrame,
     dir_for_date,  # Callable[[str], str]: create_date -> directory path
     sink: Sink,
-    bundles: int = 32,
     batch_id: int | None = None,
 ) -> DataFrame:
     """Load every claimed file's CSV rows, bulk-write via `sink`, and return
@@ -128,22 +127,25 @@ def run_upload_batch(
         claimed = claimed.withColumn(
             "sink_batch", F.lit(batch_id).cast("long")
         )
-    groups = [
-        r["sink_batch"]
-        for r in claimed.select("sink_batch").distinct().collect()
-    ]
-    if not groups:
+    # bounded collect: one row per (sink batch, claimed DATE) pair
+    dates: dict[int | None, list[str]] = {}
+    for r in claimed.select("sink_batch", "create_date").distinct().collect():
+        dates.setdefault(r["sink_batch"], []).append(str(r["create_date"]))
+    if not dates:
         return local_values_df(
             spark, [], "filename string, ok boolean, sink_batch long"
         )
     outcomes: DataFrame | None = None
-    for g in sorted(groups, key=lambda x: (x is None, x)):
+    for g in sorted(dates, key=lambda x: (x is None, x)):
         grp = (
             claimed.filter(F.col("sink_batch").isNull())
             if g is None
             else claimed.filter(F.col("sink_batch") == g)
         )
-        out = _upload_group(spark, grp, dir_for_date, sink, bundles, g)
+        # sorted globs: a retry over the same files plans the same scan
+        # splits, so the sink's chunks (and dedup tokens) repeat
+        out = _upload_group(spark, grp, sorted(dates[g]), dir_for_date,
+                            sink, g)
         outcomes = out if outcomes is None else outcomes.unionByName(out)
     return outcomes
 
@@ -179,16 +181,11 @@ def _listed_filenames(spark: SparkSession, globs: list[str]) -> DataFrame:
 def _upload_group(
     spark: SparkSession,
     claimed: DataFrame,
+    dates: list[str],
     dir_for_date,
     sink: Sink,
-    bundles: int,
     sink_batch,
 ) -> DataFrame:
-    # bounded collect: one row per claimed DATE (calendar-sized)
-    dates = [
-        str(r["create_date"])
-        for r in claimed.select("create_date").distinct().collect()
-    ]
     globs = [os.path.join(dir_for_date(d), "*") for d in dates]
     names = claimed.select("filename")
 
@@ -201,7 +198,6 @@ def _upload_group(
         # unique (the registry dedups on filename), so basename suffices
         .join(names, "filename", "left_semi")
     )
-    ticks = bundle_split(sort_by_filename(ticks), bundles)
     try:
         # task-side accounting: the row count aggregates on the executors
         # during the sink write itself (no second scan of the CSVs — at

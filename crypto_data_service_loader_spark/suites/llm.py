@@ -780,15 +780,16 @@ def q_docs_prep_pipeline(spark, sf_dir):
         .localCheckpoint()
     )
     passed = docs.join(passed_ids, "doc_id", "left_semi")
-    # `keep` is no longer checkpointed (round 17): the scan-local rollup
-    # below leaves it with exactly ONE reference (the semi-join), so the
-    # r16 materialization — justified then by the two rollup branches —
-    # would now be a pure extra job barrier.
+    # materialized KEPT ID SET: it has one reference, but pinning it keeps
+    # the dedup aggregate's shuffle and its inner semi-join out of the
+    # final plan — two broadcast semi-joins and no exchange, where the
+    # unpinned shape plans three joins and an exchange
     keep = (
         text.doc_fingerprints(passed)
         .groupBy("content_fp")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
+        .localCheckpoint()
     )
     kept = passed.join(keep, "doc_id", "left_semi")
     # per-doc rollup as ONE scan-local projection (round 17, guide §2.4):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_data_service_loader_spark.sinks.writers import MemorySink
@@ -104,6 +105,25 @@ def test_empty_root_is_quiet_cycle(spark, tmp_path):
     assert out == {"discovered": 0, "progressed": 0, "uploaded": 0, "failed": 0}
 
 
+def test_scan_error_other_than_missing_path_surfaces(spark, tmp_path,
+                                                     monkeypatch):
+    """Only "path not found" is a quiet cycle: any other listing error
+    (here an injected permission error) raises out of run_cycle instead of
+    looking like an empty tree forever."""
+    from crypto_data_service_loader_spark.streaming import service
+
+    root = str(tmp_path / "data")
+    _mk_tree(root, {"2024-03-13": {"AAA_PST_2024-03-13": [VALID]}})
+
+    def denied(spark_, root_):
+        raise PermissionError(f"listing denied: {root_}")
+
+    monkeypatch.setattr(service, "scan_directory", denied)
+    with pytest.raises(PermissionError, match="listing denied"):
+        run_cycle(spark, root, str(tmp_path / "reg"), MemorySink(),
+                  today="2024-03-14", cycle=0)
+
+
 def test_cli_resume_does_not_reuse_batch_ids(spark, tmp_path):
     from crypto_data_service_loader_spark.streaming.service import RegistryLog as RL
 
@@ -185,6 +205,42 @@ def test_cli_entrypoint(spark, tmp_path):
     assert rc == 0
     out = spark.read.parquet(root.rstrip("/") + "_out")
     assert out.count() == 1
+
+
+def test_cli_http_sink_end_to_end(spark, tmp_path):
+    """`--sink http:<url>|<table>` loads through the ClickHouse HTTP sink:
+    the valid rows land at the server exactly once and every file ends
+    FINISHED."""
+    from crypto_data_service_loader_spark.__main__ import main
+    from tests.clickhouse_fake import FakeClickHouse
+
+    root = str(tmp_path / "data")
+    reg = str(tmp_path / "reg")
+    _mk_tree(root, {
+        "2024-03-12": {"AAA_PST_2024-03-12": [VALID] * 3 + [INVALID]},
+        "2024-03-13": {"BBB_PST_2024-03-13": [VALID] * 2,
+                       "CCC_PST_2024-03-13": [VALID]},
+    })
+    fake = FakeClickHouse()
+    url = fake.start()
+    try:
+        fake.execute("CREATE TABLE ticks (x String) ENGINE = MergeTree "
+                     "PARTITION BY batch_id ORDER BY tuple()", b"")
+        rc = main([
+            "run", "--root", root, "--registry", reg,
+            "--sink", f"http:{url}|ticks", "--cycles", "2",
+            "--today", "2024-03-14", "--interval-sec", "0",
+        ])
+        assert rc == 0
+        assert len(fake.tables["ticks"]) == 6
+        assert fake.duplicate_inserts_dropped == 0
+    finally:
+        fake.stop()
+    state = {r["filename"]: r["status"]
+             for r in RegistryLog(spark, reg).state().collect()}
+    assert state == {n: "FINISHED" for n in
+                     ("AAA_PST_2024-03-12", "BBB_PST_2024-03-13",
+                      "CCC_PST_2024-03-13")}
 
 
 def test_two_day_rollover_soak(spark, tmp_path):

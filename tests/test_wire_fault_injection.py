@@ -54,10 +54,10 @@ def _setup(spark, tmp_path, n_good=40, n_poison=8, **fake_kw):
              [GOOD] * 4 + [POISON] * n_poison)
     fake = FakeClickHouse(fail_marker=b"POISONT", **fake_kw)
     url = fake.start()
-    # num_partitions=None: post straight from the bundle partitioning —
-    # bundle_split is filename-contiguous (repartitionByRange), so the
-    # poison file's rows form ONE deterministic chunk and the attempt
-    # budget is countable exactly
+    # num_partitions=None: post straight from the CSV scan's partitions,
+    # narrowed to the size-derived count (one here: the files are tiny) —
+    # the poison rows ride ONE deterministic chunk, so the attempt budget
+    # is countable exactly
     sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=None)
     sink.execute(
         "CREATE TABLE IF NOT EXISTS tickers_data (x String) ENGINE = Null"
@@ -79,7 +79,7 @@ def test_transient_mid_stream_failure_retries_and_commits_once(
     marker chunk was posted exactly maxFlushDataAttempts times."""
     fake, sink, claimed, dfd = _setup(spark, tmp_path, fail_marker_times=2)
     try:
-        out = run_upload_batch(spark, claimed, dfd, sink, bundles=2)
+        out = run_upload_batch(spark, claimed, dfd, sink)
         got = {r["filename"]: r["ok"] for r in out.collect()}
         assert got == {"AAA_PST_2024-03-13": True, "BBB_PST_2024-03-13": True}
         lines = _stored_lines(fake)
@@ -98,7 +98,7 @@ def test_ambiguous_failure_deduped_by_token(spark, tmp_path):
     fake, sink, claimed, dfd = _setup(spark, tmp_path,
                                       ambiguous_marker_times=1)
     try:
-        out = run_upload_batch(spark, claimed, dfd, sink, bundles=2)
+        out = run_upload_batch(spark, claimed, dfd, sink)
         assert all(r["ok"] for r in out.collect())
         lines = _stored_lines(fake)
         assert len(lines) == 52
@@ -121,7 +121,7 @@ def test_attempts_exhaustion_rolls_up_error_without_double_count(
     fake, sink, claimed, dfd = _setup(spark, tmp_path,
                                       fail_marker_times=10**9)
     try:
-        out = run_upload_batch(spark, claimed, dfd, sink, bundles=2)
+        out = run_upload_batch(spark, claimed, dfd, sink)
         got = {r["filename"]: r["ok"] for r in out.collect()}
         assert got == {
             "AAA_PST_2024-03-13": False, "BBB_PST_2024-03-13": False,
@@ -154,7 +154,7 @@ def test_reset_batch_falls_back_to_mutation_on_unpartitioned_table(
                                       fail_marker_times=10**9)
     fake.partition_by_batch = False
     try:
-        out = run_upload_batch(spark, claimed, dfd, sink, bundles=2)
+        out = run_upload_batch(spark, claimed, dfd, sink)
         got = {r["filename"]: r["ok"] for r in out.collect()}
         assert got == {
             "AAA_PST_2024-03-13": False, "BBB_PST_2024-03-13": False,
