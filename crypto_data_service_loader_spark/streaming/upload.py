@@ -15,9 +15,9 @@ per-bundle ERROR granularity).
 
 Scale contract: the claim set is NEVER collected on the driver. The hot
 path collects one provably tiny set — the distinct (sink batch, claim
-DATE) pairs: batches are 1 + the number of crashed predecessor cycles,
-dates are bounded by the retention window's calendar days, not by file
-count. File selection happens distributed: glob the claimed dates'
+DATE, reclaimed) rows: batches are 1 + the number of crashed predecessor
+cycles, dates are bounded by the retention window's calendar days, not by
+file count. File selection happens distributed: glob the claimed dates'
 directories, then semi-join the scan's `input_file_name()` lineage against
 the claimed filenames.
 
@@ -26,7 +26,10 @@ idempotence key its rows are written under. Fresh claims use the current
 cycle's batch; RECLAIMED files (stale IN_PROGRESS from a crashed cycle)
 keep their ORIGINAL claim batch, so the retry overwrites the same sink
 partition that may already hold their rows (crash after sink commit,
-before rollup) instead of duplicating them under a new batch id.
+before rollup) instead of duplicating them under a new batch id. A group
+holding such files calls the sink's `reset_batch` before its write: its
+chunks follow the scan's packing, not the claim, so they need not repeat
+the first attempt's chunks (or dedup tokens) byte for byte.
 """
 
 from __future__ import annotations
@@ -127,10 +130,21 @@ def run_upload_batch(
         claimed = claimed.withColumn(
             "sink_batch", F.lit(batch_id).cast("long")
         )
-    # bounded collect: one row per (sink batch, claimed DATE) pair
+    # A file an earlier attempt claimed (reclaimed IN_PROGRESS, or a
+    # FINISHED companion) may already have rows committed under its batch.
+    # The retry's chunks follow the CSV scan's packing, which unclaimed
+    # files in the same date directories also shape, so its dedup tokens
+    # need not repeat the first attempt's: such a batch is reset first.
+    # bounded collect: one row per (sink batch, claimed DATE, reclaimed)
     dates: dict[int | None, list[str]] = {}
-    for r in claimed.select("sink_batch", "create_date").distinct().collect():
-        dates.setdefault(r["sink_batch"], []).append(str(r["create_date"]))
+    reset: set[int | None] = set()
+    for g, d, reclaimed in claimed.select(
+        "sink_batch", "create_date",
+        F.col("status") != "READY_FOR_PROCESSING",
+    ).distinct().collect():
+        dates.setdefault(g, []).append(str(d))
+        if reclaimed:
+            reset.add(g)
     if not dates:
         return local_values_df(
             spark, [], "filename string, ok boolean, sink_batch long"
@@ -142,10 +156,8 @@ def run_upload_batch(
             if g is None
             else claimed.filter(F.col("sink_batch") == g)
         )
-        # sorted globs: a retry over the same files plans the same scan
-        # splits, so the sink's chunks (and dedup tokens) repeat
-        out = _upload_group(spark, grp, sorted(dates[g]), dir_for_date,
-                            sink, g)
+        out = _upload_group(spark, grp, sorted(set(dates[g])), dir_for_date,
+                            sink, g, g in reset)
         outcomes = out if outcomes is None else outcomes.unionByName(out)
     return outcomes
 
@@ -185,6 +197,7 @@ def _upload_group(
     dir_for_date,
     sink: Sink,
     sink_batch,
+    reset: bool,
 ) -> DataFrame:
     globs = [os.path.join(dir_for_date(d), "*") for d in dates]
     names = claimed.select("filename")
@@ -205,6 +218,9 @@ def _upload_group(
         payload, obs = observe_counts(
             ticks.drop("filename"), name="upload_rows"
         )
+        if reset:
+            # duck-typed like the isolation path below
+            getattr(sink, "reset_batch", lambda _b: None)(sink_batch)
         sink.write(payload, batch_id=sink_batch)
         # bounded wait: Observation.get BLOCKS until the observed plan has
         # run an action — a custom sink that never executed `payload`

@@ -124,6 +124,39 @@ def test_scan_error_other_than_missing_path_surfaces(spark, tmp_path,
                   today="2024-03-14", cycle=0)
 
 
+def test_scan_analysis_error_other_than_missing_path_surfaces(
+    spark, tmp_path, monkeypatch
+):
+    """The quiet-cycle catch keys on the PATH_NOT_FOUND condition, not on
+    the exception type: an AnalysisException with any other condition
+    raises out of run_cycle."""
+    from pyspark.errors import AnalysisException
+
+    from crypto_data_service_loader_spark.streaming import service
+
+    def unresolved(spark_, root_):
+        return spark_.range(1).select("no_such_column")
+
+    monkeypatch.setattr(service, "scan_directory", unresolved)
+    with pytest.raises(AnalysisException) as info:
+        run_cycle(spark, str(tmp_path / "data"), str(tmp_path / "reg"),
+                  MemorySink(), today="2024-03-14", cycle=0)
+    assert info.value.getCondition() != "PATH_NOT_FOUND"
+
+
+@pytest.mark.parametrize("date_dirs", [[], ["2024-03-13"]])
+def test_existing_empty_tree_is_quiet_cycle(spark, tmp_path, date_dirs):
+    """An existing root with no files, or with only empty date directories,
+    is a quiet cycle like a missing root."""
+    root = tmp_path / "data"
+    root.mkdir()
+    for d in date_dirs:
+        (root / d).mkdir()
+    out = run_cycle(spark, str(root), str(tmp_path / "reg"), MemorySink(),
+                    today="2024-03-14", cycle=0)
+    assert out == {"discovered": 0, "progressed": 0, "uploaded": 0, "failed": 0}
+
+
 def test_cli_resume_does_not_reuse_batch_ids(spark, tmp_path):
     from crypto_data_service_loader_spark.streaming.service import RegistryLog as RL
 

@@ -1,19 +1,29 @@
 """The upload path is shuffle-free from the CSV scan to the POST: no sort,
 no bundle split, no repartition between `read_ticks_csv` and the sink's
 `mapInArrow`, and the number of POSTs comes from the plan's size estimate
-(at most one per core) instead of a fixed bundle count."""
+(at most one per core) instead of a fixed bundle count. Because the chunks
+follow the scan, not the claim, a reclaimed batch is reset before its
+rewrite; the last test crashes a cycle after its POSTs to check that."""
 
 from __future__ import annotations
 
+import collections
 import datetime
 import os
 import re
 
+import pytest
+
 from crypto_data_service_loader_spark.plans.explain import physical_plan
+from crypto_data_service_loader_spark.sinks import clickhouse_http
 from crypto_data_service_loader_spark.sinks.clickhouse_http import (
     POST_TARGET_BYTES,
     ClickHouseHttpSink,
     post_partitions,
+)
+from crypto_data_service_loader_spark.streaming.service import (
+    RegistryLog,
+    run_cycle,
 )
 from crypto_data_service_loader_spark.streaming.upload import run_upload_batch
 from tests.clickhouse_fake import FakeClickHouse
@@ -124,3 +134,74 @@ def test_post_partitions_from_plan_size(spark):
     n = POST_TARGET_BYTES // 8 + 1
     assert post_partitions(spark.range(n)) == min(cores, 2)
     assert post_partitions(spark.range(10**12)) == cores
+
+
+class _Crash(BaseException):
+    """A process death: not an Exception, so no handler on the upload path
+    catches it and the cycle stops where it is."""
+
+
+class _CrashAfterCommit(ClickHouseHttpSink):
+    def write(self, df, batch_id=None):
+        super().write(df, batch_id=batch_id)
+        raise _Crash
+
+
+def _ticker_file(root, date, ticker, lines):
+    os.makedirs(os.path.join(root, date), exist_ok=True)
+    with open(os.path.join(root, date, f"{ticker}_PST_{date}"), "w") as fh:
+        fh.write("\n".join(
+            f"{ticker},{i},0.5,10,0.51,5,0.49,7,1710400000000"
+            for i in range(lines)
+        ))
+
+
+@pytest.mark.parametrize("extra_file,retry_cycle", [
+    (False, 1),  # plain reclaim: the retry's chunks repeat the first POSTs
+    (True, 1),   # a new file in the claimed date directory moves the chunks
+    (True, 0),   # the same, with the crashed cycle id replayed
+])
+def test_http_reclaim_after_commit_lands_rows_once(
+    spark, tmp_path, monkeypatch, extra_file, retry_cycle
+):
+    """Cycle 0 POSTs its batch to the ClickHouse HTTP sink and dies before
+    the FINISHED rollup. The retry reclaims the files under sink batch 0.
+    A file landing in the claimed date directory in between changes how
+    the CSV scan packs its splits and, with a small POST target, how many
+    POSTs the write makes, so the retry's chunks and dedup tokens are not
+    the first attempt's. The server must still hold every row once."""
+    monkeypatch.setattr(clickhouse_http, "POST_TARGET_BYTES", 1024)
+    root, reg = str(tmp_path / "data"), str(tmp_path / "registry")
+    date, today = "2024-03-13", "2024-03-14"
+    sizes = {"AAA-USDT": 20, "BBB-USDT": 20, "CCC-USDT": 30}
+    for ticker, n in sizes.items():
+        _ticker_file(root, date, ticker, n)
+    fake = FakeClickHouse()
+    url = fake.start()
+    try:
+        sink = ClickHouseHttpSink(url, "tickers_data")
+        sink.execute("CREATE TABLE tickers_data (x String) ENGINE = "
+                     "MergeTree PARTITION BY batch_id ORDER BY tuple()")
+        with pytest.raises(_Crash):
+            run_cycle(spark, root, reg, _CrashAfterCommit(url, "tickers_data"),
+                      today=today, cycle=0)
+        assert len(fake.tables["tickers_data"]) == sum(sizes.values())
+        expected = {(t, "0"): n for t, n in sizes.items()}
+        if extra_file:
+            _ticker_file(root, date, "ZZZ-USDT", 60)
+            expected[("ZZZ-USDT", str(retry_cycle))] = 60
+
+        stats = run_cycle(spark, root, reg, sink, today=today,
+                          cycle=retry_cycle)
+        assert stats["failed"] == 0
+        assert stats["uploaded"] == len(expected)
+        state = {r["filename"]: r["status"]
+                 for r in RegistryLog(spark, reg).state().collect()}
+        assert set(state.values()) == {"FINISHED"}, state
+        stored = collections.Counter(
+            (r[0], r[-1]) for r in fake.tables["tickers_data"]
+        )
+        assert stored == expected
+        assert fake.partitions_dropped == 1
+    finally:
+        fake.stop()
