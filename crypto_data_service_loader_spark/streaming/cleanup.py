@@ -24,15 +24,15 @@ def run_cleanup(
     fs: DataFrame,
     root: str,
     today: str,
-    last_uploaded_date: str,
 ) -> dict:
     """Returns counters {skipped, deleted, dirs_removed}. Honors the
-    retention guard (min==max / min==today / min+1==today -> skip)."""
+    retention guard (min==max / min==today / min+1==today -> skip); the
+    guard's max FINISHED date is the last uploaded date."""
     guard = retention_guard(registry, today).first()
     if guard is None or guard["skip_cleanup"] or guard["min_date"] is None:
         return {"skipped": True, "deleted": 0, "dirs_removed": 0}
 
-    cands = cleanup_candidates(fs, registry, last_uploaded_date).collect()
+    cands = cleanup_candidates(fs, registry, str(guard["max_date"])).collect()
     deleted, touched_dirs = 0, set()
     for row in cands:
         d = str(row["create_date"])

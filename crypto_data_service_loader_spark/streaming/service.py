@@ -3,17 +3,25 @@ linear pipeline per cycle (SURVEY.md §3 — DB-status coordination between
 racing flows becomes sequential composition; the only concurrency that
 remains is Spark's own task parallelism).
 
-Cycle semantics (reference MainApplication.java:54-91):
-  1. discover   — scan root/<date>/ for unregistered files -> DISCOVERED
+Cycle semantics (reference MainApplication.java:54-91), held once in
+`_run_core` and shared by the polling `run_cycle` and the streaming
+`start_service_stream`:
+  1. discover   — listed files not yet registered -> DISCOVERED
   2. progress   — status machine: today's DISCOVERED -> DOWNLOADING,
                   past DISCOVERED/DOWNLOADING -> READY_FOR_PROCESSING
-  3. upload     — claim READY -> IN_PROGRESS, bulk-load CSVs to the sink,
+  3. claim      — READY (and stale IN_PROGRESS) -> IN_PROGRESS
+  4. upload     — bulk-load the claimed CSVs to the sink, then the
                   per-file FINISHED/ERROR rollup
-  4. cleanup    — delete FINISHED files older than the retention window
+  5. cleanup    — polling mode: delete FINISHED files older than the
+                  retention window
 
 State lives in an append-only registry event log (parquet, date-partitioned
-at scale); every step appends events keyed by (cycle seq, batch id) so a
-replayed cycle is idempotent.
+at scale). A cycle reads it once: steps 1-3 are pure DataFrame functions of
+that one state, made durable in ONE append before the upload (the claim is
+on disk before any row is written), and the rollup is the second append.
+Events carry seq = cycle*10 + {0,1,2,3} (discover, progress, claim,
+rollup), so a replayed cycle is idempotent. Every `COMPACT_EVERY` cycles
+the log is compacted to one event per file.
 """
 
 from __future__ import annotations
@@ -22,12 +30,11 @@ import logging
 import os
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..functions.localrel import local_values_df
-
+from ..functions.metrics import observed_metrics
 from ..operators.registry import (
-    apply_status_update,
     current_state,
     dedup_new_files,
     transition_statuses,
@@ -40,6 +47,9 @@ from .cleanup import run_cleanup
 from .upload import claim_ready_files, run_upload_batch
 
 logger = logging.getLogger(__name__)
+
+#: cycles between registry-log compactions, in both service modes
+COMPACT_EVERY = 50
 
 
 def _stable_cycle_base(
@@ -98,9 +108,13 @@ class RegistryLog:
 
     def next_cycle(self) -> int:
         """Resume-safe cycle numbering: seq values must never repeat across
-        restarts or latest-wins compaction becomes ambiguous."""
-        row = self.events().agg(F.max("batch_id")).first()
-        return 0 if row is None or row[0] is None else int(row[0]) + 1
+        restarts or latest-wins compaction becomes ambiguous. Claim and
+        rollup events record the older sink batch, so a cycle that only
+        reclaimed files leaves no batch_id of its own: its seqs count too."""
+        batch, seq = self.events().agg(F.max("batch_id"), F.max("seq")).first()
+        seen = [v for v in (batch, None if seq is None else seq // 10)
+                if v is not None]
+        return max(seen) + 1 if seen else 0
 
     def _recover(self) -> None:
         """Heal a compaction interrupted by a crash — the log must never be
@@ -139,9 +153,9 @@ class RegistryLog:
         unlike delete-then-rename). Returns rows kept. At scale, run per
         date-partition instead of whole-log.
 
-        NOT safe concurrently with a live reader of the log path: run it
-        between polling cycles, or let the streaming service's in-epoch
-        `compact_every` hook do it (inside an epoch nothing else reads).
+        NOT safe concurrently with a live reader of the log path: the
+        cycle core runs it every `COMPACT_EVERY` cycles after the cycle's
+        last append, where (in either mode) nothing else reads the log.
         """
         import shutil
 
@@ -168,17 +182,17 @@ def start_service_stream(
     trigger_seconds: int = 15,
     available_now: bool = False,
     max_files_per_trigger: int | None = 10_000,
-    compact_every: int = 50,
 ):
     """Structured-Streaming service mode: the discovery stream drives the
-    WHOLE pipeline — each micro-batch of newly-appeared files is registered,
-    progressed, uploaded, and rolled up inside one foreachBatch epoch.
+    WHOLE pipeline — each micro-batch of newly-appeared files runs one
+    cycle of the shared core inside one foreachBatch epoch.
 
-    Differences from the polling `run_cycle`: the file source's checkpoint
-    replaces the backfill scan (restart = resume, no re-listing), and epoch
-    ids key both the registry events and the sink writes, so a replayed
-    epoch is idempotent; stale IN_PROGRESS claims from a crashed epoch are
-    reclaimed by the next one. Cleanup stays a scheduled batch job.
+    Differences from the polling `run_cycle`: the cycle's listing is the
+    micro-batch, so the file source's checkpoint replaces the backfill scan
+    (restart = resume, no re-listing); epoch ids key both the registry
+    events and the sink writes, so a replayed epoch is idempotent; and
+    there is no cleanup, which stays a scheduled `run_cycle(do_cleanup=True)`.
+    Claims, reclaims and compaction are the core's and behave alike.
 
     `today=None` re-evaluates the calendar day PER EPOCH (a frozen value
     would stall the status machine after midnight); pass a fixed date only
@@ -186,10 +200,6 @@ def start_service_stream(
     files arrive — on quiet days no epoch runs, so pending transitions wait
     for the next file (or a scheduled `run_cycle`, which progresses state
     unconditionally).
-
-    The registry event log is compacted in-line every `compact_every`
-    epochs — inside the epoch is the one point where no concurrent reader
-    holds a listing of the log path (0 disables).
     """
     import datetime as _dt
 
@@ -198,71 +208,11 @@ def start_service_stream(
     base = _stable_cycle_base(spark, registry_path, checkpoint)
 
     def _epoch(batch: DataFrame, epoch_id: int) -> None:
-        spark_ = batch.sparkSession
-        log = RegistryLog(spark_, registry_path)
-        cycle_id = base + epoch_id
-        seq_base = cycle_id * 10
-        epoch_today = today or _dt.date.today().isoformat()
-        # register the epoch's novel files
-        novel = dedup_new_files(batch, log.state().select("filename"))
-        log.append(
-            novel.select(
-                "filename", "create_date", "status",
-                F.lit(seq_base).cast("long").alias("seq"),
-                F.lit(cycle_id).cast("long").alias("batch_id"),
-            )
+        stats, _ = _run_core(
+            batch.sparkSession, batch, root, registry_path, sink,
+            today or _dt.date.today().isoformat(), base + epoch_id,
         )
-        # progress + upload, same composition as the polling cycle
-        cur = log.state()
-        changed = (
-            transition_statuses(cur, epoch_today).alias("a")
-            .join(cur.select("filename", F.col("status").alias("old_status")),
-                  "filename")
-            .filter(F.col("status") != F.col("old_status"))
-            .select(
-                "filename", "create_date", "status",
-                F.lit(seq_base + 1).cast("long").alias("seq"),
-                F.lit(cycle_id).cast("long").alias("batch_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        log.append(changed)
-        ready = claim_ready_files(
-            log.state(), current_batch=cycle_id
-        ).localCheckpoint(eager=True)
-        # the claim event carries sink_batch, NOT cycle_id: reclaimed files
-        # keep their original claim batch across any number of retries, so
-        # every re-upload overwrites the same idempotent sink partition
-        log.append(
-            ready.select(
-                "filename", "create_date", F.lit("IN_PROGRESS").alias("status"),
-                F.lit(seq_base + 2).cast("long").alias("seq"),
-                F.col("sink_batch").cast("long").alias("batch_id"),
-            )
-        )
-        outcomes = run_upload_batch(
-            spark_, ready, lambda d: os.path.join(root, d), sink,
-            batch_id=cycle_id,
-        )
-        # rollup events record sink_batch (not cycle_id) as batch_id: that
-        # is what makes a sink batch's membership recoverable, so a later
-        # reclaim can rewrite the WHOLE partition (see claim_ready_files)
-        finished = (
-            upload_status_rollup(outcomes)
-            .join(outcomes.select("filename", "sink_batch").distinct(),
-                  "filename")
-            .join(ready.select("filename", "create_date"), "filename",
-                  "inner")
-        )
-        log.append(
-            finished.select(
-                "filename", "create_date", "status",
-                F.lit(seq_base + 3).cast("long").alias("seq"),
-                F.col("sink_batch").cast("long").alias("batch_id"),
-            )
-        )
-        if compact_every and cycle_id > 0 and cycle_id % compact_every == 0:
-            log.compact()  # safe here: no concurrent reader inside the epoch
+        logger.info("epoch %d: %s", epoch_id, stats)
 
     stream = discovered_files_stream(spark, root, max_files_per_trigger)
     writer = (
@@ -287,106 +237,125 @@ def run_cycle(
     do_cleanup: bool = False,
 ) -> dict:
     """One full service cycle; returns counters for observability."""
-    log = RegistryLog(spark, registry_path)
-    seq_base = cycle * 10
-    stats: dict[str, int] = {}
-
-    def scan_or_empty() -> DataFrame:
-        # an empty/missing tree is a quiet cycle, not a failure (the
-        # reference falls back and retries, SaveNewFilesToDbFlow.java:139-163);
-        # any other error (permissions, a broken filesystem) raises
-        try:
-            return scan_directory(spark, root)  # load() lists eagerly
-        except AnalysisException as exc:
-            if exc.getCondition() != "PATH_NOT_FOUND":
-                raise
-            return local_values_df(
-                spark, [], "filename string, create_date date, status string"
-            )
-
-    # 1. discover (reference Flow 1: backfill scan + dedup + insert).
-    # localCheckpoint pins each step's delta BEFORE appending: .cache()
-    # would be re-materialized by the append's recacheByPath with a fresh
-    # file listing (the step would see its own output), and an unpinned
-    # plan would re-run the whole scan+anti-join for the counter.
-    novel = dedup_new_files(scan_or_empty(), log.state().select("filename"))
-    new_events = novel.select(
-        "filename",
-        "create_date",
-        F.lit("DISCOVERED").alias("status"),
-        F.lit(seq_base).cast("long").alias("seq"),
-        F.lit(cycle).cast("long").alias("batch_id"),
-    ).localCheckpoint(eager=True)
-    log.append(new_events)
-    stats["discovered"] = new_events.count()
-
-    # 2. progress (reference Flow 2: the status-machine CASE)
-    cur = log.state()
-    advanced = transition_statuses(cur, today)
-    changed = (
-        advanced.alias("a")
-        .join(cur.select("filename", F.col("status").alias("old_status")), "filename")
-        .filter(F.col("status") != F.col("old_status"))
-        .select(
-            "filename", "create_date", "status",
-            F.lit(seq_base + 1).cast("long").alias("seq"),
-            F.lit(cycle).cast("long").alias("batch_id"),
+    # an empty/missing tree is a quiet cycle, not a failure (the reference
+    # falls back and retries, SaveNewFilesToDbFlow.java:139-163); any other
+    # error (permissions, a broken filesystem) raises
+    try:
+        listing = scan_directory(spark, root)  # load() lists eagerly
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        listing = local_values_df(
+            spark, [], "filename string, create_date date, status string"
         )
-        .localCheckpoint(eager=True)
+    stats, registry = _run_core(
+        spark, listing, root, registry_path, sink, today, cycle
     )
-    log.append(changed)
-    stats["progressed"] = changed.count()
+    # cleanup (reference Flow 4), gated like the reference's 3 h cycle
+    if do_cleanup:
+        stats.update(run_cleanup(
+            registry, listing.select("filename", "create_date"), root, today
+        ))
+    return stats
 
-    # 3. upload (reference Flow 3: claim -> bulk load -> rollup; stale
-    # IN_PROGRESS claims orphaned by a crashed older cycle are reclaimed)
-    ready = claim_ready_files(
-        log.state(), current_batch=cycle
-    ).localCheckpoint(eager=True)
-    # sink_batch (not cycle) on the claim event: see the streaming epoch —
-    # reclaimed files must retry under their original idempotence key
-    log.append(
-        ready.select(
-            "filename", "create_date", F.lit("IN_PROGRESS").alias("status"),
-            F.lit(seq_base + 2).cast("long").alias("seq"),
-            F.col("sink_batch").cast("long").alias("batch_id"),
+
+def _run_core(
+    spark: SparkSession,
+    listing: DataFrame,
+    root: str,
+    registry_path: str,
+    sink: Sink,
+    today: str,
+    cycle: int,
+) -> tuple[dict, DataFrame]:
+    """One cycle over `listing` (filename, create_date rows): discover,
+    progress, claim, upload, rollup. Returns the counters and the registry
+    state after the cycle, built without reading the log again."""
+    log = RegistryLog(spark, registry_path)
+    logged = log.events()  # the cycle's one read of the log
+    state = current_state(logged)
+    seq = F.col("seq")
+
+    def as_events(df: DataFrame, status, k: int, batch, *extra) -> DataFrame:
+        return df.select(
+            "filename", "create_date", status.alias("status"),
+            F.lit(cycle * 10 + k).cast("long").alias("seq"),
+            batch.cast("long").alias("batch_id"), *extra,
         )
+
+    # 1. discover (reference Flow 1: backfill scan + dedup + insert)
+    found = as_events(
+        dedup_new_files(listing.select("filename", "create_date"),
+                        state.select("filename")),
+        F.lit("DISCOVERED"), 0, F.lit(cycle),
+    )
+    # 2. progress (reference Flow 2: the status-machine CASE)
+    progressed = transition_statuses(
+        state.unionByName(found).withColumn("_was", F.col("status")), today
+    )
+    moved = as_events(progressed.filter(F.col("status") != F.col("_was")),
+                      F.col("status"), 1, F.lit(cycle))
+    # 3. claim (reference Flow 3; stale IN_PROGRESS claims orphaned by a
+    # crashed older cycle are reclaimed). It reads batch_id only on
+    # IN_PROGRESS and FINISHED rows, which the transitions never touch, so
+    # the progressed state gives the claim the appended log would. The
+    # claim event records sink_batch, not the cycle: a reclaimed file keeps
+    # its original claim batch across any number of retries, so every
+    # re-upload overwrites the same idempotent sink partition.
+    claim = claim_ready_files(progressed, current_batch=cycle)
+    claims = as_events(claim, F.lit("IN_PROGRESS"), 2, F.col("sink_batch"),
+                       "sink_batch", F.col("status").alias("claimed_from"))
+    delta, stats = _pin(
+        found.unionByName(moved).unionByName(claims, allowMissingColumns=True),
+        discovered=seq == cycle * 10, progressed=seq == cycle * 10 + 1,
+    )
+    log.append(delta)  # the claim is durable before the upload
+
+    # 4. upload + rollup. The rollup records sink_batch as batch_id: that
+    # is what makes a sink batch's membership recoverable, so a later
+    # reclaim can rewrite the WHOLE partition (see claim_ready_files).
+    ready = delta.filter(seq == cycle * 10 + 2).select(
+        "filename", "create_date", F.col("claimed_from").alias("status"),
+        "sink_batch",
     )
     outcomes = run_upload_batch(
-        spark,
-        ready,
-        lambda d: os.path.join(root, d),
-        sink,
-        batch_id=cycle,
+        spark, ready, lambda d: os.path.join(root, d), sink, batch_id=cycle
     )
-    # rollup records sink_batch as batch_id — reclaim-membership recovery
-    # (see claim_ready_files' companion re-claim)
-    rolled = upload_status_rollup(outcomes).join(
-        outcomes.select("filename", "sink_batch").distinct(), "filename"
+    rolled = (
+        upload_status_rollup(outcomes)
+        .join(outcomes.select("filename", "sink_batch").distinct(), "filename")
+        .join(ready.select("filename", "create_date"), "filename")
     )
-    finished = rolled.join(
-        ready.select("filename", "create_date"), "filename", "inner"
+    status = F.col("status")
+    rollup, done = _pin(
+        as_events(rolled, status, 3, F.col("sink_batch")),
+        uploaded=status == "FINISHED", failed=status == "ERROR",
     )
-    log.append(
-        finished.select(
-            "filename", "create_date", "status",
-            F.lit(seq_base + 3).cast("long").alias("seq"),
-            F.col("sink_batch").cast("long").alias("batch_id"),
-        )
-    )
-    # one claim-sized aggregate for both counters
-    counts = outcomes.agg(
-        F.count_if(F.col("ok")).alias("uploaded"),
-        F.count_if(~F.col("ok")).alias("failed"),
-    ).first()
-    stats["uploaded"], stats["failed"] = counts["uploaded"], counts["failed"]
+    log.append(rollup)
+    stats.update(done)
 
-    # 4. cleanup (reference Flow 4), gated like the reference's 3 h cycle
-    if do_cleanup:
-        state = log.state()
-        fs = scan_or_empty().select("filename", "create_date")
-        last = state.filter(F.col("status") == "FINISHED").agg(
-            F.max("create_date")
-        ).first()[0]
-        if last is not None:
-            stats.update(run_cleanup(state, fs, root, today, str(last)))
-    return stats
+    if cycle > 0 and cycle % COMPACT_EVERY == 0:
+        log.compact()  # the state above reads files compaction deletes
+        return stats, log.state()
+    after = logged.unionByName(delta.select(*REGISTRY_EVENTS.fieldNames()))
+    return stats, current_state(after.unionByName(rollup))
+
+
+def _pin(df: DataFrame, **counters) -> tuple[DataFrame, dict[str, int]]:
+    """Materialize `df` once and count each named boolean column of
+    `counters` on the same job's tasks (an Observation: no counter job).
+
+    localCheckpoint, not .cache(): an append's recacheByPath would
+    re-materialize a cached frame with a fresh listing of the log, and the
+    step would see its own output. One partition: the rows are a cycle's
+    per-file events, so the log gains one file per append and every later
+    step over them runs one task, not one per unioned branch."""
+    obs = Observation()
+    pinned = df.coalesce(1).observe(
+        obs, *[F.count_if(c).alias(k) for k, c in counters.items()]
+    ).localCheckpoint(eager=True)
+    got = observed_metrics(obs)
+    if got is None:
+        logger.warning("cycle counters %s unavailable", sorted(counters))
+        got = {}
+    return pinned, {k: int(got.get(k) or 0) for k in counters}

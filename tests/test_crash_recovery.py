@@ -235,6 +235,29 @@ def test_compact_roundtrip_preserves_state_and_next_cycle(spark, tmp_path):
     assert log.next_cycle() == 4  # max batch_id survives compaction
 
 
+def test_next_cycle_after_a_reclaim_only_cycle(spark, tmp_path):
+    """Claim and rollup events record the older sink batch: a cycle that
+    only reclaimed files leaves events whose batch_id is not its own, so
+    a restart must number past that cycle's seqs, not past max(batch_id)."""
+    root = str(tmp_path / "data")
+    reg_path = str(tmp_path / "registry")
+    _mk_file(root, "2024-03-13", "AAA_PST_2024-03-13")
+    log = RegistryLog(spark, reg_path)
+    # cycle 5 claimed AAA and crashed before its rollup
+    _append(log, [
+        ("AAA_PST_2024-03-13", D(2024, 3, 13), "DISCOVERED", 50, 5),
+        ("AAA_PST_2024-03-13", D(2024, 3, 13), "READY_FOR_PROCESSING", 51, 5),
+        ("AAA_PST_2024-03-13", D(2024, 3, 13), "IN_PROGRESS", 52, 5),
+    ])
+    sink = IdempotentParquetSink(str(tmp_path / "out"))
+    stats = run_cycle(spark, root, reg_path, sink, today="2024-03-14", cycle=6)
+    assert stats["uploaded"] == 1
+    cycle6 = {(r["seq"], r["batch_id"]) for r in
+              log.events().filter(F.col("seq") >= 60).collect()}
+    assert cycle6 == {(62, 5), (63, 5)}  # no event of cycle 6 says 6
+    assert log.next_cycle() == 7
+
+
 def test_cycle_base_stable_across_restart(spark, tmp_path):
     """The streaming cycle base must NOT move once a checkpoint exists —
     re-deriving it from max(batch_id)+1 after a crashed epoch appended

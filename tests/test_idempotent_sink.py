@@ -70,27 +70,34 @@ def test_discovery_day_rollover(spark, tmp_path):
     (SaveNewFilesToDbFlow.java:254-272); the glob makes rollover free."""
     import os
 
-    from crypto_data_service_loader_spark.schemas import REGISTRY
-    from crypto_data_service_loader_spark.streaming.discovery import start_discovery
+    from crypto_data_service_loader_spark.sinks.writers import MemorySink
+    from crypto_data_service_loader_spark.streaming.service import (
+        RegistryLog,
+        start_service_stream,
+    )
 
     root = str(tmp_path / "data")
+    reg = str(tmp_path / "reg")
+
+    def drain(today):
+        start_service_stream(spark, root, reg, MemorySink(),
+                             str(tmp_path / "ck"), today=today,
+                             available_now=True).awaitTermination(120)
+
     os.makedirs(os.path.join(root, "2024-03-14"))
     with open(os.path.join(root, "2024-03-14", "A_PST_2024-03-14"), "w") as fh:
         fh.write("x")
-    q = start_discovery(spark, root, str(tmp_path / "reg"), str(tmp_path / "ck"),
-                        available_now=True)
-    q.awaitTermination(120)
+    drain("2024-03-14")
 
     # midnight: a new dir appears
     os.makedirs(os.path.join(root, "2024-03-15"))
     with open(os.path.join(root, "2024-03-15", "B_PST_2024-03-15"), "w") as fh:
         fh.write("y")
-    q2 = start_discovery(spark, root, str(tmp_path / "reg"), str(tmp_path / "ck"),
-                         available_now=True)
-    q2.awaitTermination(120)
+    drain("2024-03-15")
 
-    reg = spark.read.schema(REGISTRY).parquet(str(tmp_path / "reg"))
-    got = {(r["filename"], str(r["create_date"])) for r in reg.collect()}
+    events = RegistryLog(spark, reg).events()
+    got = {(r["filename"], str(r["create_date"])) for r in
+           events.filter(events.status == "DISCOVERED").collect()}
     assert got == {("A_PST_2024-03-14", "2024-03-14"),
                    ("B_PST_2024-03-15", "2024-03-15")}
 

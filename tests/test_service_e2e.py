@@ -157,6 +157,98 @@ def test_existing_empty_tree_is_quiet_cycle(spark, tmp_path, date_dirs):
     assert out == {"discovered": 0, "progressed": 0, "uploaded": 0, "failed": 0}
 
 
+def test_polling_and_streaming_share_one_cycle(spark, tmp_path):
+    """Both service modes run the same cycle core: one tree through
+    `run_cycle` and through a drained stream ends in the same registry
+    events and the same sink rows."""
+    from crypto_data_service_loader_spark.sinks.idempotent import (
+        IdempotentParquetSink,
+    )
+    from crypto_data_service_loader_spark.streaming.service import (
+        start_service_stream,
+    )
+
+    root = str(tmp_path / "data")
+    _mk_tree(root, {
+        "2024-03-12": {"AAA_PST_2024-03-12": [VALID, INVALID, VALID]},
+        "2024-03-13": {"BBB_PST_2024-03-13": [VALID]},
+        "2024-03-14": {"CCC_PST_2024-03-14": [VALID]},
+    })
+    poll, stream = tmp_path / "poll", tmp_path / "stream"
+    run_cycle(spark, root, str(poll / "reg"),
+              IdempotentParquetSink(str(poll / "out")), today="2024-03-14")
+    start_service_stream(
+        spark, root, str(stream / "reg"),
+        IdempotentParquetSink(str(stream / "out")), str(stream / "ckpt"),
+        today="2024-03-14", available_now=True,
+    ).awaitTermination(180)
+
+    def events(side):
+        return sorted(tuple(r) for r in
+                      RegistryLog(spark, str(side / "reg")).events().collect())
+
+    def rows(side):
+        return sorted(tuple(r) for r in
+                      IdempotentParquetSink(str(side / "out")).read(spark)
+                      .collect())
+
+    assert events(poll) == events(stream)
+    assert len(events(poll)) == 3 + 3 + 2 + 2  # CCC waits as DOWNLOADING
+    assert rows(poll) == rows(stream) and len(rows(poll)) == 3
+
+
+def test_polling_cycle_compacts_every_compact_every(spark, tmp_path):
+    """`run_cycle` compacts the log on every COMPACT_EVERY-th cycle, and
+    that cycle's cleanup reads the compacted log."""
+    from crypto_data_service_loader_spark.streaming.service import (
+        COMPACT_EVERY,
+    )
+
+    root = str(tmp_path / "data")
+    reg = str(tmp_path / "registry")
+    _mk_tree(root, {"2024-03-13": {"AAA_PST_2024-03-13": [VALID],
+                                   "BBB_PST_2024-03-13": [VALID]}})
+    out = run_cycle(spark, root, reg, MemorySink(), today="2024-03-14",
+                    cycle=COMPACT_EVERY, do_cleanup=True)
+    assert out == {"discovered": 2, "progressed": 2, "uploaded": 2,
+                   "failed": 0, "skipped": True, "deleted": 0,
+                   "dirs_removed": 0}
+    events = RegistryLog(spark, reg).events().collect()
+    assert sorted((r["filename"], r["status"]) for r in events) == [
+        ("AAA_PST_2024-03-13", "FINISHED"), ("BBB_PST_2024-03-13", "FINISHED")]
+
+
+def test_empty_delta_counts_without_waiting(spark, tmp_path, monkeypatch):
+    """A cycle with nothing to do reports 0 counters, and every counter
+    Observation has reported when it is read: none waits out its timeout,
+    and no upload-row Observation is read at all."""
+    from crypto_data_service_loader_spark.functions import metrics
+    from crypto_data_service_loader_spark.streaming import service, upload
+
+    root = str(tmp_path / "data")
+    reg = str(tmp_path / "registry")
+    _mk_tree(root, {"2024-03-13": {"AAA_PST_2024-03-13": [VALID]}})
+    run_cycle(spark, root, reg, MemorySink(), today="2024-03-14", cycle=0)
+
+    reads: dict[str, list] = {"service": [], "upload": []}
+
+    def recording(side):
+        def read(obs, timeout=5.0):
+            got = metrics.observed_metrics(obs, timeout=timeout)
+            reads[side].append(got)
+            return got
+        return read
+
+    monkeypatch.setattr(service, "observed_metrics", recording("service"))
+    monkeypatch.setattr(upload, "observed_metrics", recording("upload"))
+    out = run_cycle(spark, root, reg, MemorySink(), today="2024-03-14",
+                    cycle=1)
+    assert out == {"discovered": 0, "progressed": 0, "uploaded": 0, "failed": 0}
+    assert reads["service"] == [{"discovered": 0, "progressed": 0},
+                                {"uploaded": 0, "failed": 0}]
+    assert reads["upload"] == []
+
+
 def test_cli_resume_does_not_reuse_batch_ids(spark, tmp_path):
     from crypto_data_service_loader_spark.streaming.service import RegistryLog as RL
 

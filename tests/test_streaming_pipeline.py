@@ -19,7 +19,10 @@ from crypto_data_service_loader_spark.schemas import REGISTRY
 from crypto_data_service_loader_spark.sinks.writers import MemorySink
 from crypto_data_service_loader_spark.sources.csv_ingest import read_ticks_csv
 from crypto_data_service_loader_spark.streaming.cleanup import run_cleanup
-from crypto_data_service_loader_spark.streaming.discovery import start_discovery
+from crypto_data_service_loader_spark.streaming.service import (
+    RegistryLog,
+    start_service_stream,
+)
 from crypto_data_service_loader_spark.streaming.upload import run_upload_batch
 
 D = datetime.date
@@ -36,27 +39,46 @@ def _mk_tree(root, dates_files):
                 fh.write("\n".join(lines))
 
 
+def _registrations(spark, reg_path):
+    """filename -> number of DISCOVERED events in the registry event log."""
+    events = RegistryLog(spark, reg_path).events()
+    return {r["filename"]: r["count"] for r in
+            events.filter(F.col("status") == "DISCOVERED")
+            .groupBy("filename").count().collect()}
+
+
 def test_discovery_stream_registers_new_files_once(spark, tmp_path):
     root = str(tmp_path / "data")
     reg_path = str(tmp_path / "registry")
     ckpt = str(tmp_path / "ckpt")
     _mk_tree(root, {"2024-03-14": {"AAA_PST_2024-03-14": [VALID], "BBB_PST_2024-03-14": [VALID]}})
 
-    q = start_discovery(spark, root, reg_path, ckpt, available_now=True)
-    q.awaitTermination(120)
-    reg = spark.read.schema(REGISTRY).parquet(reg_path)
-    assert {r["filename"] for r in reg.collect()} == {
-        "AAA_PST_2024-03-14", "BBB_PST_2024-03-14"
-    }
-    assert {str(r["create_date"]) for r in reg.collect()} == {"2024-03-14"}
+    def drain():
+        # today's files: registered and progressed, never uploaded
+        start_service_stream(spark, root, reg_path, MemorySink(), ckpt,
+                             today="2024-03-14",
+                             available_now=True).awaitTermination(120)
 
-    # second file appears; restart drains only the delta, dedup keeps one row each
+    drain()
+    assert _registrations(spark, reg_path) == {
+        "AAA_PST_2024-03-14": 1, "BBB_PST_2024-03-14": 1
+    }
+    state = RegistryLog(spark, reg_path).state().collect()
+    assert {str(r["create_date"]) for r in state} == {"2024-03-14"}
+
+    # second file appears; restart drains only the delta, dedup keeps one
+    # registration each
     _mk_tree(root, {"2024-03-14": {"CCC_PST_2024-03-14": [VALID]}})
-    q2 = start_discovery(spark, root, reg_path, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    reg2 = spark.read.schema(REGISTRY).parquet(reg_path)
-    assert reg2.count() == 3
-    assert reg2.groupBy("filename").count().filter("count > 1").count() == 0
+    drain()
+    assert _registrations(spark, reg_path) == {
+        "AAA_PST_2024-03-14": 1, "BBB_PST_2024-03-14": 1,
+        "CCC_PST_2024-03-14": 1,
+    }
+    # the restart's epoch saw only CCC: its events are all CCC's
+    events = RegistryLog(spark, reg_path).events()
+    last = events.agg(F.max("seq")).first()[0] // 10
+    assert {r["filename"] for r in events.filter(F.col("seq") >= last * 10)
+            .collect()} == {"CCC_PST_2024-03-14"}
 
 
 def test_csv_read_drops_invalid_lines(spark, tmp_path):
@@ -131,7 +153,7 @@ def test_cleanup_deletes_finished_keeps_error(spark, tmp_path):
          ("NEW_FIN", D(2024, 3, 13))],
         "filename string, create_date date",
     )
-    out = run_cleanup(reg, fs, root, today="2024-03-14", last_uploaded_date="2024-03-13")
+    out = run_cleanup(reg, fs, root, today="2024-03-14")
     assert out == {"skipped": False, "deleted": 1, "dirs_removed": 0}
     assert not os.path.exists(os.path.join(root, "2024-03-10", "OLD_FIN"))
     assert os.path.exists(os.path.join(root, "2024-03-10", "OLD_ERR"))  # kept

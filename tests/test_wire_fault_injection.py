@@ -170,14 +170,16 @@ def test_reset_batch_falls_back_to_mutation_on_unpartitioned_table(
 
 # ---------------------------------------------------------------------------
 # Control-path fault injection (round 16, VERDICT r15 #8): the data path
-# above is covered; these schedules kill the STATUS-MACHINE appends —
-# discover, progress, claim, FINISHED/ERROR rollup — cleanly or TORN
-# (half the event rows land, then the crash), and assert the reference's
-# state-machine invariants (SURVEY §5) hold across the retry cycle:
-# statuses only move forward within a cycle, no (filename, seq) ever
-# carries two conflicting statuses (the compaction-ambiguity hazard —
-# the event-log form of "a file both FINISHED and ERROR"), and the
-# retry converges with every row committed exactly once.
+# above is covered; these schedules kill a cycle at each of its crash
+# windows — the claim append (discover + progress + claim events), the
+# FINISHED/ERROR rollup append, and the sink write before and after its
+# commit — cleanly or TORN (half the rows land, then the crash), and
+# assert the reference's state-machine invariants (SURVEY §5) hold across
+# the retry cycle: statuses only move forward within a cycle, no
+# (filename, seq) ever carries two conflicting statuses (the
+# compaction-ambiguity hazard — the event-log form of "a file both
+# FINISHED and ERROR"), and the retry converges with every row committed
+# exactly once.
 # ---------------------------------------------------------------------------
 
 import pytest
@@ -193,28 +195,52 @@ from crypto_data_service_loader_spark.streaming.service import (
 GOOD_LINE = GOOD
 
 
-class _InjectedFault(RuntimeError):
-    pass
+class _InjectedFault(BaseException):
+    """A crash, not an error: the upload's per-file isolation path catches
+    `Exception`, and a killed process is never isolated."""
+
+
+#: (kill point, torn) of the running test: 0 and 1 index the cycle's two
+#: registry appends, 2 and 3 are the sink write before and after commit
+_SCHEDULE = {"kill": -1, "torn": False}
 
 
 class _FaultyLog(RegistryLog):
     """RegistryLog whose Nth append dies — optionally AFTER writing half
     of its rows (the torn-append window a mid-write crash opens)."""
 
-    schedule: tuple = (-1, False)  # (append index to kill at, torn)
     calls = 0
 
     def append(self, rows):
         i = _FaultyLog.calls
         _FaultyLog.calls += 1
-        kill, torn = _FaultyLog.schedule
-        if i == kill:
-            if torn:
+        if i == _SCHEDULE["kill"]:
+            if _SCHEDULE["torn"]:
                 n = rows.count()
                 if n > 1:
                     super().append(rows.limit(n // 2))
             raise _InjectedFault(f"injected at append #{i}")
         super().append(rows)
+
+
+class _FaultySink(IdempotentParquetSink):
+    """Sink whose write dies before its commit (torn: after committing
+    half the rows) or after a whole commit, before the rollup append. A
+    commit is whole by definition, so torn changes nothing at kill 3."""
+
+    def write(self, df, batch_id=None):
+        kill = _SCHEDULE["kill"]
+        if kill == 2:
+            if _SCHEDULE["torn"]:
+                # collect, not count(): the CSV scan refuses a bare count
+                rows = df.collect()
+                half = df.sparkSession.createDataFrame(
+                    rows[: len(rows) // 2], df.schema)
+                super().write(half, batch_id=batch_id)
+            raise _InjectedFault("injected before the sink commit")
+        super().write(df, batch_id=batch_id)
+        if kill == 3:
+            raise _InjectedFault("injected after the sink commit")
 
 
 _RANK = {"DISCOVERED": 0, "READY_FOR_PROCESSING": 1, "IN_PROGRESS": 2,
@@ -226,28 +252,29 @@ _RANK = {"DISCOVERED": 0, "READY_FOR_PROCESSING": 1, "IN_PROGRESS": 2,
 def test_status_machine_survives_control_path_faults(
     spark, tmp_path, monkeypatch, kill, torn
 ):
-    """Every (append-point x clean/torn) fault schedule: cycle 0 dies at
-    the scheduled status append; the retry cycle must converge to
+    """Every (crash point x clean/torn) fault schedule: cycle 0 dies at
+    the scheduled append or sink write; the retry cycle must converge to
     FINISHED with exactly-once sink rows, and the whole event log must
     satisfy the forward-only / no-conflicting-status invariants."""
-    import os as _os
-
     root = str(tmp_path / "data")
     reg_path = str(tmp_path / "registry")
     _mk_file(root, "2024-03-13", "AAA_PST_2024-03-13", [GOOD_LINE] * 3)
     _mk_file(root, "2024-03-13", "BBB_PST_2024-03-13", [GOOD_LINE] * 2)
-    sink = IdempotentParquetSink(str(tmp_path / "out"))
+    out = str(tmp_path / "out")
 
     monkeypatch.setattr(service_mod, "RegistryLog", _FaultyLog)
     _FaultyLog.calls = 0
-    _FaultyLog.schedule = (kill, torn)
+    monkeypatch.setitem(_SCHEDULE, "kill", kill)
+    monkeypatch.setitem(_SCHEDULE, "torn", torn)
     with pytest.raises(_InjectedFault):
-        run_cycle(spark, root, reg_path, sink, today="2024-03-14", cycle=0)
+        run_cycle(spark, root, reg_path, _FaultySink(out),
+                  today="2024-03-14", cycle=0)
 
     # recovery: a fresh process — real log class, next cycle id
     monkeypatch.setattr(service_mod, "RegistryLog", RegistryLog)
     log = RegistryLog(spark, reg_path)
     cycle1 = max(log.next_cycle(), 1)
+    sink = IdempotentParquetSink(out)
     stats = run_cycle(
         spark, root, reg_path, sink, today="2024-03-14", cycle=cycle1
     )
