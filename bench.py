@@ -603,8 +603,7 @@ def _bench_clickhouse(
     fake = FakeClickHouse(lite=True)
     url = fake.start()
     try:
-        sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=32,
-                                  send_batch_id=False)
+        sink = ClickHouseHttpSink(url, "tickers_data", send_batch_id=False)
         sink.execute("CREATE TABLE IF NOT EXISTS tickers_data (x String) ENGINE = Null")
         # untimed warm-up: pays Python-worker spawn + first-use imports once,
         # so the timed trials measure sustained throughput (what the

@@ -1,6 +1,7 @@
 """Typed engine config mirroring the reference's YAML
-(application.origin.yaml:1-43 — see SURVEY.md O30). Defaults are the
-reference's published values; everything is overridable from a YAML file.
+(application.origin.yaml:1-43 — see SURVEY.md O30). It holds only the keys
+the engine reads; defaults are the reference's published values. The
+reference's other keys still load from a YAML file and are ignored.
 """
 
 from __future__ import annotations
@@ -10,32 +11,23 @@ from dataclasses import dataclass, field
 
 @dataclass
 class IngestConfig:
-    divide_data_parts_quantity: int = 32      # yaml:16 — upload bundles
     max_flush_data_attempts: int = 3          # yaml:15
     sleep_on_reconnect_ms: int = 500          # yaml:18
-    compression_buffer_size: int = 131072     # yaml:21 (transport concern)
-    valid_expected_columns: int = 9           # TickersDataConfig.java:70
 
 
 @dataclass
 class DiscoveryConfig:
-    files_buffer_size: int = 8192             # yaml:25
     flush_timeout_sec: int = 15               # yaml:26
-    max_reconnect_attempts: int = 3           # yaml:27-28
 
 
 @dataclass
 class FlowCycles:
-    status_flow_sec: int = 20                 # yaml:31
     upload_flow_sec: int = 30                 # yaml:36
     cleanup_hours: int = 3                    # yaml:41
 
 
 @dataclass
 class EngineConfig:
-    root_path: str = "."
-    registry_path: str = "./_registry"
-    checkpoint_path: str = "./_checkpoints"
     ingest: IngestConfig = field(default_factory=IngestConfig)
     discovery: DiscoveryConfig = field(default_factory=DiscoveryConfig)
     cycles: FlowCycles = field(default_factory=FlowCycles)
@@ -47,9 +39,6 @@ class EngineConfig:
         with open(path) as fh:
             raw = yaml.safe_load(fh) or {}
         cfg = EngineConfig()
-        cfg.root_path = raw.get("root_path", cfg.root_path)
-        cfg.registry_path = raw.get("registry_path", cfg.registry_path)
-        cfg.checkpoint_path = raw.get("checkpoint_path", cfg.checkpoint_path)
         for section, obj in (("ingest", cfg.ingest),
                              ("discovery", cfg.discovery),
                              ("cycles", cfg.cycles)):

@@ -86,11 +86,14 @@ def sessionize(
     """Sessionization: a new session starts when the gap since the previous
     event of the same key exceeds the threshold. lag + conditional cumsum —
     one shuffle on the key, no UDF (the classic pattern; in streaming the
-    same semantics come from F.session_window)."""
+    same semantics come from F.session_window). Gaps are measured in
+    microseconds, the timestamp's own precision: a whole-second cast would
+    keep a 1800.5 s gap inside a 30-minute session."""
     w = Window.partitionBy(key_col).orderBy(time_col)
-    gap = F.col(time_col).cast("long") - F.lag(F.col(time_col).cast("long")).over(w)
+    us = F.unix_micros(F.col(time_col))
+    gap = us - F.lag(us).over(w)
     new_session = F.when(
-        gap.isNull() | (gap > gap_minutes * 60), F.lit(1)
+        gap.isNull() | (gap > gap_minutes * 60 * 10**6), F.lit(1)
     ).otherwise(F.lit(0))
     return df.withColumn(
         "session_id",

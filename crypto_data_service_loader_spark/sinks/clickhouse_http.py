@@ -8,10 +8,10 @@ wire that is `POST /?query=INSERT%20INTO%20t%20FORMAT%20CSV` with a
 `Content-Encoding: gzip` body — plain HTTP, no driver jar needed.
 
 Spark-first shape: `df.mapInArrow` straight over the input partitions — no
-shuffle. By default the partitions are narrowed (`coalesce`) to a count
-derived from the optimized plan's size estimate: one POST per
-`POST_TARGET_BYTES`, at most one per core (the reference instead splits
-every load into a fixed `divideDataPartsQuantity` of 32 bundles). Each
+shuffle. The partitions are narrowed (`coalesce`) to a count derived
+from the optimized plan's size estimate: one POST per `POST_TARGET_BYTES`,
+at most one per core (the reference instead splits every load into a
+fixed `divideDataPartsQuantity` of 32 bundles). Each
 partition renders its rows to CSV lines JVM-side (whole-stage codegen,
 trailing newline included), so the newline-joined POST payload is
 *exactly the Arrow string column's data buffer* — assembled zero-copy from
@@ -164,18 +164,11 @@ class ClickHouseHttpSink(Sink):
 
     url: str  # e.g. http://host:8123  (database via ?database= on the url)
     table: str
-    #: None = post from the input partitioning (no shuffle), narrowed to
-    #: `post_partitions(df)`; an int round-robin repartitions to exactly
-    #: that many POSTing tasks (the reference's fixed bundle split,
-    #: divideDataPartsQuantity), right when the upstream partitioning is
-    #: skewed
-    num_partitions: int | None = None
     attempts: int = 3  # reference maxFlushDataAttempts: 3
     sleep_sec: float = 0.5  # reference sleepOnReconnectMs: 500
     gzip_level: int = 6
     timeout_sec: float = 60.0
     send_batch_id: bool = True  # ReplacingMergeTree(batch_id) replay dedup
-    properties: dict = field(default_factory=dict)
     #: optional functions.metrics.LogEventBuffer — each write appends the
     #: reference's compression-stage throughput event (MB, MB/s, seconds:
     #: CompressionHandler.java:113-134 formLoggingData parity)
@@ -261,10 +254,7 @@ class ClickHouseHttpSink(Sink):
         spark.conf.set(key, "200000")
         t0 = time.perf_counter()
         try:
-            if self.num_partitions is None:
-                lines = _csv_line(df).coalesce(post_partitions(df))
-            else:
-                lines = _csv_line(df).repartition(self.num_partitions)
+            lines = _csv_line(df).coalesce(post_partitions(df))
             # one row per POSTed chunk: bounded by partitions x chunks, so
             # the counters are summed on the driver — one job, no exchange
             chunks = lines.mapInArrow(_send, schema=(

@@ -4,14 +4,9 @@ The reference is at-least-once: a failed bundle restarts the whole GZIP
 stream and can double-insert ticks (TickersDataLoader.java:112-158 restarts;
 ClickHouse dedup not configured). Inside Spark's foreachBatch the batch id
 is stable across replays of the same epoch, so a sink keyed on batch_id is
-exactly-once:
-
-- parquet flavor: each batch writes to `<path>/batch_id=<id>` with
-  overwrite — a replayed epoch overwrites its own output, never appends a
-  duplicate;
-- JDBC flavor (ClickHouse): write batch_id as a column and use
-  `ReplacingMergeTree`/`INSERT ... SELECT WHERE batch_id NOT IN` patterns
-  server-side (documented, not exercised here: no server in this env).
+exactly-once: each batch writes to `<path>/batch_id=<id>` with overwrite —
+a replayed epoch overwrites its own output, never appends a duplicate.
+(`clickhouse_http.ClickHouseHttpSink` is the same contract on the server.)
 """
 
 from __future__ import annotations
@@ -20,11 +15,18 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .writers import Sink
+
 
 @dataclass
-class IdempotentParquetSink:
+class IdempotentParquetSink(Sink):
     """Exactly-once parquet sink: one partition dir per batch id, replay
-    overwrites in place (dynamic partition overwrite)."""
+    overwrites in place (dynamic partition overwrite).
+
+    `reset_batch` stays the base class's no-op: write() replaces the whole
+    batch_id partition atomically, so ANY retry, reshaped or not, already
+    drops what an earlier attempt committed (the property the ClickHouse
+    HTTP sink needs an explicit DROP PARTITION to get)."""
 
     path: str
 
@@ -40,12 +42,6 @@ class IdempotentParquetSink:
             .partitionBy("batch_id")
             .parquet(self.path)
         )
-
-    def reset_batch(self, batch_id: int | None) -> None:
-        """No-op by design: write() is dynamic-partition-overwrite keyed
-        on batch_id, so ANY retry — reshaped or not — already replaces
-        the whole partition atomically (the property the ClickHouse HTTP
-        sink needs an explicit DROP PARTITION to get)."""
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)

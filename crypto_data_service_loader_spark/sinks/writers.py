@@ -1,31 +1,25 @@
-"""Bulk-load sinks (reference O6/O18, SURVEY.md §2A).
+"""The sink contract (reference O6/O18, SURVEY.md §2A).
 
-The reference's hot path streams GZIP'd CSV over HTTP into ClickHouse with
-32 parallel bundles (TickersDataLoader.java:60-87, ClickHouseDAO.java:146-158).
-In Spark the *capability* is: partition-parallel bulk write with transport
-options. Two implementations behind one call signature:
+The reference loads ticks one way: GZIP'd CSV over ClickHouse's HTTP
+interface (ClickHouseDAO.java:146-158). A sink here takes a DataFrame and
+the batch id it is written under, and the write must be idempotent per
+batch id: a replayed or retried batch replaces what an earlier attempt of
+the same batch committed, never adds to it. That is what makes each valid
+row land exactly once (the reference restarts a failed bundle and can
+double-insert). Implementations:
 
-- ParquetSink: hermetic local default (tests/bench).
-- ClickHouseJdbcSink: `df.write.jdbc` with batchsize/numPartitions and the
-  reference's server-side ingest knobs (`async_insert=1,
-  wait_for_async_insert=1`, application.origin.yaml:8) as URL params.
-  Gated behind import/availability — no JDBC driver ships in this image.
-
-Exactly-once: pipelines call sinks inside `foreachBatch(batch_id)`; sinks
-that can, key idempotence on batch_id (SURVEY.md §7 — strictly better than
-the reference's at-least-once bundle restart).
+- `idempotent.IdempotentParquetSink`: local default, one parquet
+  partition per batch id, replaced by dynamic partition overwrite.
+- `clickhouse_http.ClickHouseHttpSink`: the reference's wire path, with a
+  per-chunk dedup token and `reset_batch` dropping the batch's partition.
+- `MemorySink` below: tests only; it records every call, replays included.
 """
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-
-from ..functions.retry import retry
-
-logger = logging.getLogger(__name__)
 
 
 class Sink:
@@ -41,68 +35,6 @@ class Sink:
         (dynamic partition overwrite, deterministic re-chunking) need
         nothing; transports that append opaque chunks (ClickHouse HTTP)
         override with a partition drop."""
-
-
-@dataclass
-class ParquetSink(Sink):
-    """Append-mode parquet sink, optionally partitioned (date partitioning
-    mirrors the reference's dir-per-day layout and enables partition pruning
-    for every registry query)."""
-
-    path: str
-    partition_by: list[str] = field(default_factory=list)
-    mode: str = "append"
-
-    def write(self, df: DataFrame, batch_id: int | None = None) -> None:
-        w = df.write.mode(self.mode)
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(self.path)
-
-
-@dataclass
-class ClickHouseJdbcSink(Sink):
-    """JDBC bulk writer with the reference's ingest tuning.
-
-    numPartitions=32 mirrors `divideDataPartsQuantity: 32`; batchsize is the
-    row-batch per INSERT; compression + async_insert ride the URL. Retries
-    wrap the whole write (the reference's maxFlushDataAttempts=3 /
-    sleepOnReconnectMs=500, application.origin.yaml:15,18).
-    """
-
-    url: str  # e.g. jdbc:clickhouse://host:8443/db?compress=1&async_insert=1&wait_for_async_insert=1
-    table: str
-    batchsize: int = 100_000
-    num_partitions: int = 32
-    attempts: int = 3
-    sleep_sec: float = 0.5
-    properties: dict = field(default_factory=dict)
-
-    def options_dict(self) -> dict[str, str]:
-        """The full option set handed to the JDBC writer — factored out so
-        tests pin it without a driver on the classpath."""
-        return {
-            "url": self.url,
-            "dbtable": self.table,
-            "batchsize": str(self.batchsize),
-            "numPartitions": str(self.num_partitions),
-            **{k: str(v) for k, v in self.properties.items()},
-        }
-
-    def _save(self, df: DataFrame) -> None:
-        """The one line that needs a JDBC driver jar (none ships in this
-        image — tests override this seam; see tests/test_idempotent_sink.py
-        for the no-driver coverage and the integration recipe)."""
-        df.write.format("jdbc").options(**self.options_dict()).mode(
-            "append"
-        ).save()
-
-    def write(self, df: DataFrame, batch_id: int | None = None) -> None:
-        def _do() -> None:
-            self._save(df.repartition(self.num_partitions))
-
-        retry(_do, attempts=self.attempts, sleep_sec=self.sleep_sec,
-              what=f"jdbc write to {self.table}")
 
 
 @dataclass

@@ -95,7 +95,12 @@ class RegistryLog:
         self._recover()
         try:
             return self.spark.read.schema(REGISTRY_EVENTS).parquet(self.path)
-        except Exception:  # noqa: BLE001 — first cycle: log does not exist
+        except AnalysisException as exc:
+            # first cycle: the log does not exist yet. Anything else must
+            # raise: read as empty, the cycle would re-claim every file on
+            # disk under new batch ids and load its rows twice
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
             return local_values_df(self.spark, [], REGISTRY_EVENTS)
 
     def state(self) -> DataFrame:

@@ -37,10 +37,10 @@ from __future__ import annotations
 import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.localrel import local_values_df
-
 from ..functions.metrics import observe_counts, observed_metrics
 from ..operators.registry import filter_status_in
 from ..sinks.writers import Sink
@@ -151,11 +151,7 @@ def run_upload_batch(
         )
     outcomes: DataFrame | None = None
     for g in sorted(dates, key=lambda x: (x is None, x)):
-        grp = (
-            claimed.filter(F.col("sink_batch").isNull())
-            if g is None
-            else claimed.filter(F.col("sink_batch") == g)
-        )
+        grp = claimed.filter(F.col("sink_batch").eqNullSafe(g))
         out = _upload_group(spark, grp, sorted(set(dates[g])), dir_for_date,
                             sink, g, g in reset)
         outcomes = out if outcomes is None else outcomes.unionByName(out)
@@ -172,7 +168,8 @@ def _listed_filenames(spark: SparkSession, globs: list[str]) -> DataFrame:
     `binaryFile` prunes the `content` column when it isn't selected, so this
     is a pure FileIndex listing — no file is opened. Per-glob loads so one
     vanished date directory (retention cleanup raced the claim) empties that
-    date's listing instead of failing the whole group.
+    date's listing instead of failing the whole group; any other listing
+    error raises into the group's isolation path.
     """
     parts: list[DataFrame] = []
     for g in globs:
@@ -180,7 +177,9 @@ def _listed_filenames(spark: SparkSession, globs: list[str]) -> DataFrame:
             parts.append(
                 spark.read.format("binaryFile").load(g).select("path")
             )
-        except Exception:  # noqa: BLE001 — date dir deleted: nothing listed
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
             logger.warning("claimed date directory missing: %s", g)
     if not parts:
         return local_values_df(spark, [], "filename string")
@@ -219,8 +218,7 @@ def _upload_group(
             ticks.drop("filename"), name="upload_rows"
         )
         if reset:
-            # duck-typed like the isolation path below
-            getattr(sink, "reset_batch", lambda _b: None)(sink_batch)
+            sink.reset_batch(sink_batch)
         sink.write(payload, batch_id=sink_batch)
         # bounded wait: Observation.get BLOCKS until the observed plan has
         # run an action — a custom sink that never executed `payload`
@@ -292,9 +290,7 @@ def _upload_group(
             # chunks. reset failure falls through to ERROR like a write
             # failure: stranded partial rows are reclaimed (and reset
             # again) by the next cycle, never silently duplicated.
-            # duck-typed: sinks are structural here (IdempotentParquetSink
-            # is not a Sink subclass); absent hook = already idempotent
-            getattr(sink, "reset_batch", lambda _b: None)(sink_batch)
+            sink.reset_batch(sink_batch)
             sink.write(combined, batch_id=sink_batch)
             outcomes.extend((f, True) for f in good_files)
         except Exception:

@@ -52,7 +52,7 @@ def test_bulk_insert_gzip_passthru_and_readback(spark):
     fake = FakeClickHouse()
     url = fake.start()
     try:
-        sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=4)
+        sink = ClickHouseHttpSink(url, "tickers_data")
         sink.run_script(DDL)
         sent = sink.write(_ticks_df(spark, 100), batch_id=7)
         assert sent == 100
@@ -78,8 +78,7 @@ def test_compression_metrics_parity(spark):
 
     with FakeClickHouse() as url:
         buf = LogEventBuffer()
-        sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=2,
-                                  metrics=buf)
+        sink = ClickHouseHttpSink(url, "tickers_data", metrics=buf)
         sink.run_script(DDL)
         sink.write(_ticks_df(spark, 50), batch_id=3)
         assert len(buf.events) == 1
@@ -93,7 +92,7 @@ def test_compression_metrics_parity(spark):
 
 def test_truncate_o26(spark):
     with FakeClickHouse() as url:
-        sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=2)
+        sink = ClickHouseHttpSink(url, "tickers_data")
         sink.run_script(DDL)
         sink.write(_ticks_df(spark, 10), batch_id=0)
         assert sink.count() == 10
@@ -109,7 +108,7 @@ def test_insert_retries_then_succeeds(spark):
     url = fake.start()
     try:
         sink = ClickHouseHttpSink(
-            url, "tickers_data", num_partitions=1, attempts=3, sleep_sec=0.05
+            url, "tickers_data", attempts=3, sleep_sec=0.05
         )
         fake.fail_times = 0
         sink.run_script(DDL)
@@ -126,7 +125,7 @@ def test_insert_fails_after_exhausted_retries(spark):
     url = fake.start()
     try:
         sink = ClickHouseHttpSink(
-            url, "tickers_data", num_partitions=1, attempts=2, sleep_sec=0.01
+            url, "tickers_data", attempts=2, sleep_sec=0.01
         )
         sink.run_script(DDL)
         fake.fail_times = 10
@@ -152,8 +151,7 @@ def test_service_cycle_through_clickhouse_sink(spark, tmp_path):
         fh.write("\n".join([line] * 4))
 
     with FakeClickHouse() as url:
-        sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=2,
-                                  send_batch_id=False)
+        sink = ClickHouseHttpSink(url, "tickers_data", send_batch_id=False)
         sink.run_script(DDL)
         reg = str(tmp_path / "registry")
         # one cycle takes the file DISCOVERED -> READY -> IN_PROGRESS -> FINISHED
@@ -176,7 +174,7 @@ def test_insert_dedup_token_sent_and_idempotent(spark):
     fake = FakeClickHouse()
     url = fake.start()
     try:
-        sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=2)
+        sink = ClickHouseHttpSink(url, "tickers_data")
         sink.run_script(DDL)
         sent = sink.write(_ticks_df(spark, 50), batch_id=1)
         assert sent == 50
@@ -260,8 +258,7 @@ def test_lite_fake_acks_gzip_without_inflating(spark):
     fake = FakeClickHouse(lite=True)
     url = fake.start()
     try:
-        sink = ClickHouseHttpSink(url, "t", num_partitions=2,
-                                  send_batch_id=False)
+        sink = ClickHouseHttpSink(url, "t", send_batch_id=False)
         sink.execute("CREATE TABLE t (x String) ENGINE = Null")
         df = spark.range(1000).selectExpr("cast(id as string) AS s")
         sent = sink.write(df)
@@ -274,14 +271,13 @@ def test_lite_fake_acks_gzip_without_inflating(spark):
 
 
 def test_no_shuffle_when_num_partitions_none(spark):
-    """num_partitions=None posts from the input partitioning — the plan
-    must carry no Exchange (at 100 TB a repartition of the rendered lines
-    is a full shuffle of the payload)."""
+    """The sink posts from the input partitioning (narrowed, never
+    repartitioned) — the plan must carry no Exchange (at 100 TB a
+    repartition of the rendered lines is a full shuffle of the payload)."""
     fake = FakeClickHouse(lite=True)
     url = fake.start()
     try:
-        sink = ClickHouseHttpSink(url, "t", num_partitions=None,
-                                  send_batch_id=False)
+        sink = ClickHouseHttpSink(url, "t", send_batch_id=False)
         sink.execute("CREATE TABLE t (x String) ENGINE = Null")
         df = spark.range(0, 10000, 1, 8).selectExpr("cast(id as string) AS s")
         from crypto_data_service_loader_spark.sinks.clickhouse_http import (

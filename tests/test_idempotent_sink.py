@@ -102,66 +102,14 @@ def test_discovery_day_rollover(spark, tmp_path):
                    ("B_PST_2024-03-15", "2024-03-15")}
 
 
-def test_jdbc_sink_options_repartition_and_retry(spark):
-    """ClickHouseJdbcSink without a driver jar: option assembly, the
-    numPartitions repartition, and the retry wrap are all pinned at the
-    `_save` seam — the only untestable line left is the literal
-    `.save()`, which needs a jar.
+def test_idempotent_sink_is_a_sink():
+    """The local default obeys the one sink contract: it is a `Sink`, and
+    its `reset_batch` is the base class's no-op (its overwrite already
+    replaces the whole batch)."""
+    from crypto_data_service_loader_spark.sinks.writers import Sink
 
-    Integration recipe (not runnable in this image — no JDBC driver):
-    start a ClickHouse server, launch with
-    `--jars clickhouse-jdbc-<ver>-all.jar`, then
-    ClickHouseJdbcSink(url="jdbc:clickhouse://host:8123/db"
-    "?compress=1&async_insert=1&wait_for_async_insert=1",
-    table="tickers_data").write(df).
-    """
-    from crypto_data_service_loader_spark.sinks.writers import (
-        ClickHouseJdbcSink,
-    )
-
-    calls: list[int] = []
-
-    class Probe(ClickHouseJdbcSink):
-        def _save(self, df):
-            calls.append(df.rdd.getNumPartitions())
-            if len(calls) < 3:
-                raise RuntimeError("injected transient jdbc failure")
-
-    sink = Probe(
-        url="jdbc:clickhouse://h:8443/db?compress=1&async_insert=1",
-        table="tickers_data",
-        batchsize=50_000,
-        num_partitions=8,
-        attempts=3,
-        sleep_sec=0.0,
-        properties={"isolationLevel": "NONE"},
-    )
-    assert sink.options_dict() == {
-        "url": "jdbc:clickhouse://h:8443/db?compress=1&async_insert=1",
-        "dbtable": "tickers_data",
-        "batchsize": "50000",
-        "numPartitions": "8",
-        "isolationLevel": "NONE",
-    }
-    sink.write(spark.range(100))
-    # two transient failures retried; every attempt saw the 8-way repartition
-    assert calls == [8, 8, 8]
-
-
-def test_jdbc_sink_exhausted_retries_rethrow(spark):
-    from crypto_data_service_loader_spark.sinks.writers import (
-        ClickHouseJdbcSink,
-    )
-    import pytest as _pytest
-
-    class AlwaysDown(ClickHouseJdbcSink):
-        def _save(self, df):
-            raise RuntimeError("connection refused")
-
-    sink = AlwaysDown(url="jdbc:clickhouse://h:8443/db", table="t",
-                      attempts=2, sleep_sec=0.0)
-    with _pytest.raises(RuntimeError, match="connection refused"):
-        sink.write(spark.range(1))
+    assert issubclass(IdempotentParquetSink, Sink)
+    assert IdempotentParquetSink.reset_batch is Sink.reset_batch
 
 
 def test_compact_requires_row_identity(spark, tmp_path):

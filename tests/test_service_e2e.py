@@ -157,6 +157,47 @@ def test_existing_empty_tree_is_quiet_cycle(spark, tmp_path, date_dirs):
     assert out == {"discovered": 0, "progressed": 0, "uploaded": 0, "failed": 0}
 
 
+def test_registry_read_error_other_than_missing_path_surfaces(
+    spark, tmp_path, monkeypatch
+):
+    """Only a missing log reads as empty. Any other read failure (here a
+    filesystem scheme nothing implements) raises out of events() and out
+    of run_cycle before the cycle appends anything: read as empty, the
+    cycle would re-claim every file on disk under new batch ids."""
+    from crypto_data_service_loader_spark.streaming import service
+
+    assert RegistryLog(spark, str(tmp_path / "no_log")).events().count() == 0
+    broken = "nosuchfs://host/registry"
+    with pytest.raises(Exception, match="nosuchfs"):
+        RegistryLog(spark, broken).events()
+
+    appended = []
+    monkeypatch.setattr(service.RegistryLog, "append",
+                        lambda self, rows: appended.append(rows))
+    root = str(tmp_path / "data")
+    _mk_tree(root, {"2024-03-13": {"AAA_PST_2024-03-13": [VALID]}})
+    sink = MemorySink()
+    with pytest.raises(Exception, match="nosuchfs"):
+        run_cycle(spark, root, broken, sink, today="2024-03-14", cycle=0)
+    assert appended == [] and sink.write_calls == 0
+
+
+def test_upload_listing_error_other_than_missing_path_surfaces(
+    spark, tmp_path
+):
+    """The upload's per-date listing reads a vanished date directory as
+    empty (its claimed files then roll up ERROR); any other listing error
+    raises into the group's isolation path."""
+    from crypto_data_service_loader_spark.streaming.upload import (
+        _listed_filenames,
+    )
+
+    gone = str(tmp_path / "data" / "2024-03-13" / "*")
+    assert _listed_filenames(spark, [gone]).count() == 0
+    with pytest.raises(Exception, match="nosuchfs"):
+        _listed_filenames(spark, [gone, "nosuchfs://host/2024-03-13/*"])
+
+
 def test_polling_and_streaming_share_one_cycle(spark, tmp_path):
     """Both service modes run the same cycle core: one tree through
     `run_cycle` and through a drained stream ends in the same registry
@@ -366,6 +407,58 @@ def test_cli_http_sink_end_to_end(spark, tmp_path):
     assert state == {n: "FINISHED" for n in
                      ("AAA_PST_2024-03-12", "BBB_PST_2024-03-13",
                       "CCC_PST_2024-03-13")}
+
+
+@pytest.mark.parametrize("scheme", ["parquet", "jdbc"])
+def test_cli_rejects_removed_sink_specs(spark, tmp_path, capsys, scheme):
+    """Only exactly-once sinks can be built: `parquet:` (append) and
+    `jdbc:` (append, no driver) are unknown specs, and nothing is loaded."""
+    from crypto_data_service_loader_spark.__main__ import main
+
+    root = str(tmp_path / "data")
+    _mk_tree(root, {"2024-03-13": {"AAA_PST_2024-03-13": [VALID]}})
+    out = str(tmp_path / "out")
+    rc = main([
+        "run", "--root", root, "--registry", str(tmp_path / "reg"),
+        "--sink", f"{scheme}:{out}", "--cycles", "1",
+        "--today", "2024-03-14", "--interval-sec", "0",
+    ])
+    assert rc == 2
+    assert f"unknown sink spec: {scheme}:" in capsys.readouterr().err
+    assert not os.path.exists(out)
+
+
+def test_config_holds_read_keys_and_ignores_the_rest(tmp_path):
+    """A YAML shaped like the reference's loads: the keys the engine reads
+    reach the config, and the keys nothing reads are ignored."""
+    import dataclasses
+
+    from crypto_data_service_loader_spark.config import EngineConfig
+
+    path = tmp_path / "engine.yaml"
+    path.write_text(
+        "root_path: /data\nregistry_path: /data/_reg\n"
+        "checkpoint_path: /data/_ckpt\n"
+        "ingest:\n  max_flush_data_attempts: 5\n"
+        "  divide_data_parts_quantity: 32\n"
+        "  compression_buffer_size: 131072\n  valid_expected_columns: 9\n"
+        "discovery:\n  files_buffer_size: 8192\n"
+        "  max_reconnect_attempts: 3\n  flush_timeout_sec: 7\n"
+        "cycles:\n  status_flow_sec: 20\n"
+    )
+    cfg = EngineConfig.from_yaml(str(path))
+    assert cfg.ingest.max_flush_data_attempts == 5
+    assert cfg.discovery.flush_timeout_sec == 7
+    values = {
+        f"{sec.name}.{f.name}"
+        for sec in dataclasses.fields(cfg)
+        for f in dataclasses.fields(getattr(cfg, sec.name))
+    }
+    assert values == {
+        "ingest.max_flush_data_attempts", "ingest.sleep_on_reconnect_ms",
+        "discovery.flush_timeout_sec",
+        "cycles.upload_flow_sec", "cycles.cleanup_hours",
+    }
 
 
 def test_two_day_rollover_soak(spark, tmp_path):

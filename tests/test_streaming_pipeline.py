@@ -136,6 +136,18 @@ def test_sink_retry_then_success(spark, tmp_path):
     assert sink.write_calls == 3 and len(sink.batches) == 1
 
 
+def test_sink_retry_exhausted_rethrows(spark):
+    """Reference FlowsUtil contract: after the last attempt the failure is
+    rethrown, not swallowed."""
+    from crypto_data_service_loader_spark.functions.retry import retry
+
+    sink = MemorySink(fail_times=5)
+    with pytest.raises(RuntimeError, match="injected sink failure #2"):
+        retry(lambda: sink.write(spark.range(1), 0), attempts=2,
+              sleep_sec=0.0)
+    assert sink.write_calls == 2 and sink.batches == []
+
+
 def test_cleanup_deletes_finished_keeps_error(spark, tmp_path):
     root = str(tmp_path / "data")
     _mk_tree(root, {

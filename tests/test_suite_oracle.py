@@ -4,7 +4,6 @@ standalone version)."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
@@ -13,26 +12,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 from crypto_data_service_loader_spark.tables import TABLES
-
-
-def _cell(v):
-    if v is None or (isinstance(v, float) and math.isnan(v)):
-        return "<null>"
-    try:
-        if pd.isna(v):
-            return "<null>"
-    except (TypeError, ValueError):
-        pass
-    if isinstance(v, float):
-        return repr(v)
-    return str(v)
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        df[c] = df[c].map(_cell)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+from tools.diffcheck import _cell, _normalize
 
 
 @pytest.fixture(scope="module")
@@ -64,3 +44,47 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
     assert list(s.columns) == list(o.columns)
     assert len(s) == len(o)
     pd.testing.assert_frame_equal(s, o)
+
+
+def test_cell_handles_array_values_and_nulls():
+    """The one oracle normaliser renders an array-valued cell as a string
+    (pd.isna is elementwise on arrays, so an unguarded truth test raises)
+    and maps None and NaN to one null marker."""
+    import numpy as np
+
+    assert _cell([1, 2]) == "[1, 2]"
+    assert _cell(np.array([1, 2])) == "[1 2]"
+    assert _cell(None) == "<null>"
+    assert _cell(float("nan")) == "<null>"
+
+
+def test_sessionize_gap_measured_in_microseconds(spark, tmp_path):
+    """Gaps of 1800.5 s, 1800 s and 1799.5 s against a 30-minute limit:
+    only the first one starts a new session, in Spark as in the DuckDB
+    twin. A gap measured in whole seconds reads 1800 s for the first."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1)
+    offsets = [0.0, 1800.5, 3600.5, 5400.0]  # gaps 1800.5, 1800, 1799.5
+    n = len(offsets)
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array([t0 + dt.timedelta(seconds=o) for o in offsets],
+                       pa.timestamp("us")),
+        "user_id": pa.array([7] * n, pa.int64()),
+        "event_type": ["view"] * n,
+        "value": [1.0] * n,
+        "props": ["{}"] * n,
+    }), str(tmp_path / "events.parquet"))
+    sdf = QUERIES["sessionize_events"](spark, str(tmp_path)).toPandas()
+    c = duckdb.connect()
+    c.execute(f"CREATE VIEW events AS SELECT * FROM "
+              f"'{tmp_path / 'events.parquet'}'")
+    odf = c.execute(ORACLES["sessionize_events"]).fetch_arrow_table().to_pandas()
+    assert sorted(zip(sdf["event_id"], sdf["session_id"])) == [
+        (0, 1), (1, 2), (2, 2), (3, 2)
+    ]
+    pd.testing.assert_frame_equal(_normalize(sdf), _normalize(odf))

@@ -54,11 +54,11 @@ def _setup(spark, tmp_path, n_good=40, n_poison=8, **fake_kw):
              [GOOD] * 4 + [POISON] * n_poison)
     fake = FakeClickHouse(fail_marker=b"POISONT", **fake_kw)
     url = fake.start()
-    # num_partitions=None: post straight from the CSV scan's partitions,
-    # narrowed to the size-derived count (one here: the files are tiny) —
-    # the poison rows ride ONE deterministic chunk, so the attempt budget
-    # is countable exactly
-    sink = ClickHouseHttpSink(url, "tickers_data", num_partitions=None)
+    # the sink posts straight from the CSV scan's partitions, narrowed to
+    # the size-derived count (one here: the files are tiny) — the poison
+    # rows ride ONE deterministic chunk, so the attempt budget is countable
+    # exactly
+    sink = ClickHouseHttpSink(url, "tickers_data")
     sink.execute(
         "CREATE TABLE IF NOT EXISTS tickers_data (x String) ENGINE = Null"
     )

@@ -33,8 +33,11 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 def _cell(v):
     if v is None or (isinstance(v, float) and math.isnan(v)):
         return "<null>"
-    if pd.isna(v):
-        return "<null>"
+    try:
+        if pd.isna(v):
+            return "<null>"
+    except (TypeError, ValueError):  # array-valued cell: pd.isna is elementwise
+        pass
     if isinstance(v, float):
         return repr(v)
     return str(v)
