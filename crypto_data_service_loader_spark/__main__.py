@@ -171,7 +171,7 @@ def main(argv: list[str] | None = None) -> int:
         from .sinks.idempotent import IdempotentParquetSink
 
         sink = IdempotentParquetSink(sink_spec.split(":", 1)[1])
-    elif sink_spec.startswith("http:"):
+    elif sink_spec.startswith("http:") and "|" in sink_spec:
         from .sinks.clickhouse_http import ClickHouseHttpSink
 
         url, table = sink_spec.split(":", 1)[1].rsplit("|", 1)

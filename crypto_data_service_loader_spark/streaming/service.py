@@ -279,7 +279,10 @@ def _run_core(
     log = RegistryLog(spark, registry_path)
     logged = log.events()  # the cycle's one read of the log
     state = current_state(logged)
-    seq = F.col("seq")
+    # a delta holds only this cycle's events, so seq % 10 tells their
+    # kind; a `cycle * 10 + k` literal would be written into the generated
+    # code and compile fresh classes every cycle
+    kind = F.col("seq") % 10
 
     def as_events(df: DataFrame, status, k: int, batch, *extra) -> DataFrame:
         return df.select(
@@ -312,14 +315,14 @@ def _run_core(
                        "sink_batch", F.col("status").alias("claimed_from"))
     delta, stats = _pin(
         found.unionByName(moved).unionByName(claims, allowMissingColumns=True),
-        discovered=seq == cycle * 10, progressed=seq == cycle * 10 + 1,
+        discovered=kind == 0, progressed=kind == 1,
     )
     log.append(delta)  # the claim is durable before the upload
 
     # 4. upload + rollup. The rollup records sink_batch as batch_id: that
     # is what makes a sink batch's membership recoverable, so a later
     # reclaim can rewrite the WHOLE partition (see claim_ready_files).
-    ready = delta.filter(seq == cycle * 10 + 2).select(
+    ready = delta.filter(kind == 2).select(
         "filename", "create_date", F.col("claimed_from").alias("status"),
         "sink_batch",
     )

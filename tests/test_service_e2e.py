@@ -428,6 +428,27 @@ def test_cli_rejects_removed_sink_specs(spark, tmp_path, capsys, scheme):
     assert not os.path.exists(out)
 
 
+def test_cli_rejects_http_spec_without_table(spark, tmp_path, capsys):
+    """`--sink http:<url>` without `|<table>` is an unknown spec (exit 2),
+    not an uncaught unpacking error, and nothing is registered or
+    loaded."""
+    from crypto_data_service_loader_spark.__main__ import main
+
+    root = str(tmp_path / "data")
+    reg = str(tmp_path / "reg")
+    _mk_tree(root, {"2024-03-13": {"AAA_PST_2024-03-13": [VALID]}})
+    rc = main([
+        "run", "--root", root, "--registry", reg,
+        "--sink", "http:http://localhost:1", "--cycles", "1",
+        "--today", "2024-03-14", "--interval-sec", "0",
+    ])
+    assert rc == 2
+    assert "unknown sink spec: http:http://localhost:1" in (
+        capsys.readouterr().err)
+    assert not os.path.exists(reg)
+    assert not os.path.exists(root + "_out")
+
+
 def test_config_holds_read_keys_and_ignores_the_rest(tmp_path):
     """A YAML shaped like the reference's loads: the keys the engine reads
     reach the config, and the keys nothing reads are ignored."""
