@@ -32,11 +32,10 @@ def path_to_registry_cols(df: DataFrame, path_col: str = "path") -> DataFrame:
     ).filter(F.col("create_date").isNotNull())
 
 
-def scan_directory(
-    spark: SparkSession, root: str, since: str | None = None
-) -> DataFrame:
-    """O1 — backfill scan: every file under root/<date>/, optionally only
-    dates > `since` (the reference scans from max(create_date) in the DB).
+def scan_directory(spark: SparkSession, root: str) -> DataFrame:
+    """O1 — backfill scan: every file under root/<date>/ (the reference
+    scans from max(create_date) in the DB; here the registry dedup drops
+    files already known).
 
     Uses the binaryFile source listing (no file contents are read: we select
     only `path`, and the column-pruned scan skips content). Partition-scales:
@@ -49,10 +48,7 @@ def scan_directory(
         .load(os.path.join(root, "*"))
         .select("path")
     )
-    reg = path_to_registry_cols(files)
-    if since is not None:
-        reg = reg.filter(F.col("create_date") > F.to_date(F.lit(since)))
-    return reg
+    return path_to_registry_cols(files)
 
 
 def registry_from_listing(

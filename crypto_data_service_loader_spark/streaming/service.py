@@ -327,12 +327,10 @@ def _run_core(
         "sink_batch",
     )
     outcomes = run_upload_batch(
-        spark, ready, lambda d: os.path.join(root, d), sink, batch_id=cycle
+        spark, ready, lambda d: os.path.join(root, d), sink
     )
-    rolled = (
-        upload_status_rollup(outcomes)
-        .join(outcomes.select("filename", "sink_batch").distinct(), "filename")
-        .join(ready.select("filename", "create_date"), "filename")
+    rolled = upload_status_rollup(outcomes).join(
+        ready.select("filename", "create_date", "sink_batch"), "filename"
     )
     status = F.col("status")
     rollup, done = _pin(

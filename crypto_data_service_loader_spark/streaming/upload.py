@@ -7,11 +7,17 @@ CSV into ClickHouse, then per-bundle FINISHED/ERROR rollup.
 Spark-first batch composition (`run_upload_batch`): the claim becomes a
 registry transform; there is no sort and no bundle split — the sink POSTs
 straight from the CSV scan's partitions, with no shuffle between the scan
-and the POST (nothing downstream reads a row order: outcomes come from the
-directory listing) — and compression/pipelining belong to the sink
-transport. Per-file success tracking uses `input_file_name()` lineage with
-a try/except per file-group inside the batch (finer than the reference's
-per-bundle ERROR granularity).
+and the POST (nothing downstream reads a row order) — and
+compression/pipelining belong to the sink transport.
+
+One listing settles each sink batch: the claimed dates' directories are
+listed once, per directory. The directories it finds are all the CSV scan
+reads, and a claimed file's outcome is whether the listing holds it: a
+file missing from disk (retention cleanup raced the claim, or its whole
+directory is gone) rolls up ERROR, since the write committed no rows for
+it. Any other failure of the listing, scan or write sends the batch to a
+per-file isolation path (finer than the reference's per-bundle ERROR
+granularity).
 
 Scale contract: the claim set is NEVER collected on the driver. The hot
 path collects one provably tiny set — the distinct (sink batch, claim
@@ -41,7 +47,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.localrel import local_values_df
-from ..functions.metrics import observe_counts, observed_metrics
 from ..operators.registry import filter_status_in
 from ..sinks.writers import Sink
 from ..sources.csv_ingest import read_ticks_csv
@@ -49,17 +54,15 @@ from ..sources.csv_ingest import read_ticks_csv
 logger = logging.getLogger(__name__)
 
 
-def claim_ready_files(
-    registry: DataFrame, current_batch: int | None = None
-) -> DataFrame:
+def claim_ready_files(registry: DataFrame, current_batch: int) -> DataFrame:
     """EP2 step 1: select READY_FOR_PROCESSING — the optimistic claim. In the
     event-log registry the IN_PROGRESS event is appended by the caller with
     this batch's id, making the claim idempotent per epoch.
 
-    With `current_batch`, IN_PROGRESS claims from this or older batches are
-    RECLAIMED: a crash between the claim append and the FINISHED/ERROR
-    rollup would otherwise leave those files stuck forever (the reference
-    has the same gap — a killed process orphans its IN_PROGRESS rows).
+    IN_PROGRESS claims from `current_batch` or older batches are RECLAIMED:
+    a crash between the claim append and the FINISHED/ERROR rollup would
+    otherwise leave those files stuck forever (the reference has the same
+    gap — a killed process orphans its IN_PROGRESS rows).
     `batch_id <= current` (not `<`) so a replayed epoch re-claims its OWN
     crashed attempt's files under the same stable cycle id.
 
@@ -78,10 +81,7 @@ def claim_ready_files(
     records sink_batch as batch_id) are therefore re-claimed as companions:
     their rows are rewritten byte-identically into the same partition.
     """
-    ready = filter_status_in(registry, ["READY_FOR_PROCESSING"])
-    if current_batch is None:
-        return ready
-    ready = ready.withColumn(
+    ready = filter_status_in(registry, ["READY_FOR_PROCESSING"]).withColumn(
         "sink_batch", F.lit(int(current_batch)).cast("long")
     )
     stale = registry.filter(
@@ -116,28 +116,25 @@ def run_upload_batch(
     claimed: DataFrame,
     dir_for_date,  # Callable[[str], str]: create_date -> directory path
     sink: Sink,
-    batch_id: int | None = None,
 ) -> DataFrame:
     """Load every claimed file's CSV rows, bulk-write via `sink`, and return
-    per-file (filename, ok) outcomes for the O19 status rollup.
+    per-file (filename, ok) outcomes for the O19 status rollup. `claimed`
+    rows carry (filename, create_date, status, sink_batch), as
+    `claim_ready_files` gives them.
 
     Writes one sink batch per distinct `sink_batch` group (normally exactly
     one; one extra per crashed predecessor being retried), each under its
     own idempotence key. Whole-group failure falls back to per-file
     isolation (reference bundle semantics, TickersDataLoader.java:160-168).
     """
-    if "sink_batch" not in claimed.columns:
-        claimed = claimed.withColumn(
-            "sink_batch", F.lit(batch_id).cast("long")
-        )
     # A file an earlier attempt claimed (reclaimed IN_PROGRESS, or a
     # FINISHED companion) may already have rows committed under its batch.
     # The retry's chunks follow the CSV scan's packing, which unclaimed
     # files in the same date directories also shape, so its dedup tokens
     # need not repeat the first attempt's: such a batch is reset first.
     # bounded collect: one row per (sink batch, claimed DATE, reclaimed)
-    dates: dict[int | None, list[str]] = {}
-    reset: set[int | None] = set()
+    dates: dict[int, list[str]] = {}
+    reset: set[int] = set()
     for g, d, reclaimed in claimed.select(
         "sink_batch", "create_date",
         F.col("status") != "READY_FOR_PROCESSING",
@@ -146,12 +143,10 @@ def run_upload_batch(
         if reclaimed:
             reset.add(g)
     if not dates:
-        return local_values_df(
-            spark, [], "filename string, ok boolean, sink_batch long"
-        )
+        return local_values_df(spark, [], "filename string, ok boolean")
     outcomes: DataFrame | None = None
-    for g in sorted(dates, key=lambda x: (x is None, x)):
-        grp = claimed.filter(F.col("sink_batch").eqNullSafe(g))
+    for g in sorted(dates):
+        grp = claimed.filter(F.col("sink_batch") == g)
         out = _upload_group(spark, grp, sorted(set(dates[g])), dir_for_date,
                             sink, g, g in reset)
         outcomes = out if outcomes is None else outcomes.unionByName(out)
@@ -162,31 +157,31 @@ def _basename(col):
     return F.element_at(F.split(col, "/"), -1)
 
 
-def _listed_filenames(spark: SparkSession, globs: list[str]) -> DataFrame:
-    """Distributed listing of the claimed dates' directories: basenames only.
+def _listed_filenames(
+    spark: SparkSession, globs: list[str]
+) -> tuple[list[str], DataFrame]:
+    """List the claimed dates' directories once, per glob: returns the globs
+    that matched files and a distributed (filename) listing of them.
 
     `binaryFile` prunes the `content` column when it isn't selected, so this
-    is a pure FileIndex listing — no file is opened. Per-glob loads so one
-    vanished date directory (retention cleanup raced the claim) empties that
-    date's listing instead of failing the whole group; any other listing
-    error raises into the group's isolation path.
+    is a pure FileIndex listing — no file is opened. A vanished or empty date
+    directory (retention cleanup raced the claim) drops out of both instead
+    of failing the whole group; any other listing error raises into the
+    group's isolation path.
     """
-    parts: list[DataFrame] = []
+    found: list[str] = []
+    listed = local_values_df(spark, [], "path string")
     for g in globs:
         try:
-            parts.append(
-                spark.read.format("binaryFile").load(g).select("path")
-            )
+            part = spark.read.format("binaryFile").load(g).select("path")
         except AnalysisException as exc:
             if exc.getCondition() != "PATH_NOT_FOUND":
                 raise
             logger.warning("claimed date directory missing: %s", g)
-    if not parts:
-        return local_values_df(spark, [], "filename string")
-    listed = parts[0]
-    for p in parts[1:]:
-        listed = listed.unionByName(p)
-    return listed.select(_basename(F.col("path")).alias("filename")).distinct()
+            continue
+        listed = part if not found else listed.unionByName(part)
+        found.append(g)
+    return found, listed.select(_basename(F.col("path")).alias("filename"))
 
 
 def _upload_group(
@@ -195,59 +190,33 @@ def _upload_group(
     dates: list[str],
     dir_for_date,
     sink: Sink,
-    sink_batch,
+    sink_batch: int,
     reset: bool,
 ) -> DataFrame:
-    globs = [os.path.join(dir_for_date(d), "*") for d in dates]
     names = claimed.select("filename")
-
-    ticks = (
-        read_ticks_csv(spark, globs)
-        .withColumn("filename", _basename(F.col("_source_file")))
-        .drop("_source_file")
-        # lineage join: keep only claimed files (the glob may sweep in
-        # same-day files that are not READY yet); filenames are globally
-        # unique (the registry dedups on filename), so basename suffices
-        .join(names, "filename", "left_semi")
-    )
     try:
-        # task-side accounting: the row count aggregates on the executors
-        # during the sink write itself (no second scan of the CSVs — at
-        # scale a post-hoc count() would double the read cost)
-        payload, obs = observe_counts(
-            ticks.drop("filename"), name="upload_rows"
+        # the one listing: the scan reads only the directories it found, so
+        # a vanished directory scans nothing instead of failing the cycle
+        found, listed = _listed_filenames(
+            spark, [os.path.join(dir_for_date(d), "*") for d in dates]
+        )
+        ticks = (
+            read_ticks_csv(spark, found)
+            .withColumn("filename", _basename(F.col("_source_file")))
+            .drop("_source_file")
+            # lineage join: keep only claimed files (the glob may sweep in
+            # same-day files that are not READY yet); filenames are globally
+            # unique (the registry dedups on filename), so basename suffices
+            .join(names, "filename", "left_semi")
         )
         if reset:
             sink.reset_batch(sink_batch)
-        sink.write(payload, batch_id=sink_batch)
-        # bounded wait: Observation.get BLOCKS until the observed plan has
-        # run an action — a custom sink that never executed `payload`
-        # would hang here, not raise, so read via the timeout helper
-        got = observed_metrics(obs, timeout=5.0)
-        if got is not None:
-            logger.info(
-                "sink batch %s committed %s rows", sink_batch, got.get("rows")
-            )
-        else:
-            logger.info(
-                "sink batch %s committed (row count unavailable)", sink_batch
-            )
-        # ok is derived from the scanned lineage, not assumed: a claimed
-        # file deleted from disk after the claim (e.g. retention cleanup)
-        # is absent from the listing and must roll up ERROR, not FINISHED —
-        # the write committed zero rows for it.
-        listed = _listed_filenames(spark, globs).withColumn(
-            "_seen", F.lit(True)
-        )
-        return (
-            names.distinct()
-            .join(listed, "filename", "left")
-            .select(
-                "filename",
-                F.coalesce(F.col("_seen"), F.lit(False)).alias("ok"),
-                F.lit(sink_batch).cast("long").alias("sink_batch"),
-            )
-        )
+        sink.write(ticks.drop("filename"), batch_id=sink_batch)
+        # ok comes from the listing, not assumed: a claimed file it does
+        # not hold committed zero rows and rolls up ERROR, not FINISHED
+        return names.join(
+            listed.withColumn("_seen", F.lit(True)), "filename", "left"
+        ).select("filename", F.coalesce("_seen", F.lit(False)).alias("ok"))
     except Exception:
         logger.exception(
             "upload batch %s failed; isolating per file", sink_batch
@@ -296,9 +265,4 @@ def _upload_group(
         except Exception:
             logger.exception("retry write for batch %s failed", sink_batch)
             outcomes.extend((f, False) for f in good_files)
-    return local_values_df(
-        spark,
-        [(f, ok, None if sink_batch is None else int(sink_batch))
-         for f, ok in outcomes],
-        "filename string, ok boolean, sink_batch long",
-    )
+    return local_values_df(spark, outcomes, "filename string, ok boolean")

@@ -145,6 +145,36 @@ def test_claimed_file_deleted_after_claim_rolls_up_error(spark, tmp_path):
     assert sink.read(spark).count() == 3  # only AAA's rows
 
 
+def test_claimed_date_directory_gone_rolls_up_error(spark, tmp_path):
+    """A READY file whose whole date directory is gone (retention cleanup
+    or an operator removed it) rolls up ERROR; it must not fail the cycle.
+    Raised out of the cycle, the file stayed IN_PROGRESS and every later
+    cycle reclaimed it and failed the same way, wedging the service."""
+    root = str(tmp_path / "data")
+    reg_path = str(tmp_path / "registry")
+    _mk_file(root, "2024-03-13", "AAA_PST_2024-03-13", lines=3)
+    # BBB's directory 2024-03-12 does not exist
+
+    log = RegistryLog(spark, reg_path)
+    _append(log, [
+        ("AAA_PST_2024-03-13", D(2024, 3, 13), "DISCOVERED", 0, 0),
+        ("BBB_PST_2024-03-12", D(2024, 3, 12), "DISCOVERED", 0, 0),
+        ("AAA_PST_2024-03-13", D(2024, 3, 13), "READY_FOR_PROCESSING", 1, 0),
+        ("BBB_PST_2024-03-12", D(2024, 3, 12), "READY_FOR_PROCESSING", 1, 0),
+    ])
+    sink = IdempotentParquetSink(str(tmp_path / "out"))
+    stats = run_cycle(spark, root, reg_path, sink, today="2024-03-14", cycle=1)
+    assert stats["uploaded"] == 1 and stats["failed"] == 1
+    final = {r["filename"]: r["status"] for r in log.state().collect()}
+    assert final == {"AAA_PST_2024-03-13": "FINISHED",
+                     "BBB_PST_2024-03-12": "ERROR"}
+    assert sink.read(spark).count() == 3  # AAA's rows, once
+
+    stats = run_cycle(spark, root, reg_path, sink, today="2024-03-14", cycle=2)
+    assert stats["uploaded"] == 0 and stats["failed"] == 0
+    assert sink.read(spark).count() == 3
+
+
 def test_double_crash_retries_keep_original_sink_batch(spark, tmp_path):
     """If the reclaiming cycle crashes at the same point, the NEXT reclaim
     must still target the original partition: the claim event preserves the

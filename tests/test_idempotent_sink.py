@@ -30,7 +30,6 @@ def test_upload_fallback_preserves_all_files_under_idempotent_sink(spark, tmp_pa
     import datetime
     import os
 
-    from crypto_data_service_loader_spark.schemas import REGISTRY
     from crypto_data_service_loader_spark.streaming.upload import run_upload_batch
 
     root = str(tmp_path / "data")
@@ -40,9 +39,9 @@ def test_upload_fallback_preserves_all_files_under_idempotent_sink(spark, tmp_pa
         with open(os.path.join(root, "2024-03-13", name), "w") as fh:
             fh.write("\n".join([line] * n))
     claimed = spark.createDataFrame(
-        [("AAA", datetime.date(2024, 3, 13), "READY_FOR_PROCESSING"),
-         ("BBB", datetime.date(2024, 3, 13), "READY_FOR_PROCESSING")],
-        REGISTRY,
+        [("AAA", datetime.date(2024, 3, 13), "READY_FOR_PROCESSING", 5),
+         ("BBB", datetime.date(2024, 3, 13), "READY_FOR_PROCESSING", 5)],
+        "filename string, create_date date, status string, sink_batch long",
     )
 
     class FlakyIdempotent(IdempotentParquetSink):
@@ -58,7 +57,7 @@ def test_upload_fallback_preserves_all_files_under_idempotent_sink(spark, tmp_pa
 
     sink = FlakyIdempotent(str(tmp_path / "out"))
     res = run_upload_batch(
-        spark, claimed, lambda d: os.path.join(root, d), sink, batch_id=5
+        spark, claimed, lambda d: os.path.join(root, d), sink
     )
     assert {r["filename"]: r["ok"] for r in res.collect()} == {"AAA": True, "BBB": True}
     assert sink.read(spark).count() == 5  # ALL rows survived, not just BBB's
