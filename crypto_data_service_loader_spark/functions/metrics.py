@@ -72,31 +72,6 @@ def timed(buffer: LogEventBuffer, message: str, rows: int = 0, data_bytes: int =
         )
 
 
-def observe_counts(
-    df: DataFrame, name: str = "ingest", value_col: str | None = None
-):
-    """In-plan metrics via Spark's Observation API: row count (and
-    optionally a column sum) are aggregated ON THE TASKS during whatever
-    action consumes `df` — no second scan. At 100 TB this is the only
-    sane accounting: a post-hoc count() re-reads the entire source,
-    while an observation rides the same pass as the write (the
-    reference's per-bundle row counters, CompressionHandler.java:113-134,
-    are the thread-local analogue). Batch only — streaming queries get
-    the same numbers from StreamingQueryProgress via
-    streaming/progress.py.
-
-    Returns (observed_df, observation); read `observation.get` AFTER the
-    action completes.
-    """
-    from pyspark.sql import Observation, functions as F
-
-    obs = Observation(name)
-    metrics = [F.count(F.lit(1)).alias("rows")]
-    if value_col is not None:
-        metrics.append(F.sum(value_col).alias(f"sum_{value_col}"))
-    return df.observe(obs, *metrics), obs
-
-
 def observed_metrics(obs, timeout: float = 5.0) -> dict | None:
     """Read an Observation's metrics with a bounded wait.
 

@@ -38,7 +38,8 @@ from ..operators.registry import (
     current_state,
     dedup_new_files,
     transition_statuses,
-    upload_status_rollup,
+    # unused here; perfbench/workloads.py's tracer wraps it by this name
+    upload_status_rollup,  # noqa: F401
 )
 from ..schemas import REGISTRY_EVENTS
 from ..sinks.writers import Sink
@@ -326,15 +327,12 @@ def _run_core(
         "filename", "create_date", F.col("claimed_from").alias("status"),
         "sink_batch",
     )
-    outcomes = run_upload_batch(
-        spark, ready, lambda d: os.path.join(root, d), sink
-    )
-    rolled = upload_status_rollup(outcomes).join(
-        ready.select("filename", "create_date", "sink_batch"), "filename"
-    )
-    status = F.col("status")
+    outcomes = run_upload_batch(spark, ready, root, sink)
+    # each claimed file has one outcome row, so its rollup is a projection
+    ok, status = F.col("ok"), F.col("status")
     rollup, done = _pin(
-        as_events(rolled, status, 3, F.col("sink_batch")),
+        as_events(outcomes, F.when(ok, "FINISHED").otherwise("ERROR"), 3,
+                  F.col("sink_batch")),
         uploaded=status == "FINISHED", failed=status == "ERROR",
     )
     log.append(rollup)

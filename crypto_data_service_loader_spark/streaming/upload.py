@@ -10,21 +10,23 @@ straight from the CSV scan's partitions, with no shuffle between the scan
 and the POST (nothing downstream reads a row order) — and
 compression/pipelining belong to the sink transport.
 
-One listing settles each sink batch: the claimed dates' directories are
-listed once, per directory. The directories it finds are all the CSV scan
-reads, and a claimed file's outcome is whether the listing holds it: a
-file missing from disk (retention cleanup raced the claim, or its whole
-directory is gone) rolls up ERROR, since the write committed no rows for
-it. Any other failure of the listing, scan or write sends the batch to a
-per-file isolation path (finer than the reference's per-bundle ERROR
-granularity).
+One glob settles each sink batch: `<root>/{d1,d2,...}/*` over the
+batch's claimed dates lists the directories that exist, and the CSV scan
+reads the same glob. A claimed file's outcome is whether that listing
+holds it: a file missing from disk (retention cleanup raced the claim,
+or its whole directory is gone) rolls up ERROR, since the write committed
+no rows for it, and when no claimed directory is left nothing is written
+at all. Any other failure of the listing, scan or write sends the batch
+to a per-file isolation path (finer than the reference's per-bundle
+ERROR granularity). Each claimed file has exactly one outcome row, so
+the rollup is a projection of the claim rows.
 
 Scale contract: the claim set is NEVER collected on the driver. The hot
 path collects one provably tiny set — the distinct (sink batch, claim
 DATE, reclaimed) rows: batches are 1 + the number of crashed predecessor
 cycles, dates are bounded by the retention window's calendar days, not by
-file count. File selection happens distributed: glob the claimed dates'
-directories, then semi-join the scan's `input_file_name()` lineage against
+file count. File selection happens distributed: glob the claimed dates,
+then semi-join the scan's `input_file_name()` lineage against
 the claimed filenames.
 
 Exactly-once contract: every claimed file carries a `sink_batch` — the
@@ -50,6 +52,7 @@ from ..functions.localrel import local_values_df
 from ..operators.registry import filter_status_in
 from ..sinks.writers import Sink
 from ..sources.csv_ingest import read_ticks_csv
+from ..sources.fs_scan import path_to_registry_cols
 
 logger = logging.getLogger(__name__)
 
@@ -114,12 +117,13 @@ def claim_ready_files(registry: DataFrame, current_batch: int) -> DataFrame:
 def run_upload_batch(
     spark: SparkSession,
     claimed: DataFrame,
-    dir_for_date,  # Callable[[str], str]: create_date -> directory path
+    root: str,
     sink: Sink,
 ) -> DataFrame:
-    """Load every claimed file's CSV rows, bulk-write via `sink`, and return
-    per-file (filename, ok) outcomes for the O19 status rollup. `claimed`
-    rows carry (filename, create_date, status, sink_batch), as
+    """Load every claimed file's CSV rows from the `root/<date>/` tree,
+    bulk-write via `sink`, and return one (filename, create_date,
+    sink_batch, ok) outcome row per claimed row for the O19 status rollup.
+    `claimed` rows carry (filename, create_date, status, sink_batch), as
     `claim_ready_files` gives them.
 
     Writes one sink batch per distinct `sink_batch` group (normally exactly
@@ -143,12 +147,15 @@ def run_upload_batch(
         if reclaimed:
             reset.add(g)
     if not dates:
-        return local_values_df(spark, [], "filename string, ok boolean")
+        return local_values_df(
+            spark, [],
+            "filename string, create_date date, sink_batch long, ok boolean",
+        )
     outcomes: DataFrame | None = None
     for g in sorted(dates):
         grp = claimed.filter(F.col("sink_batch") == g)
-        out = _upload_group(spark, grp, sorted(set(dates[g])), dir_for_date,
-                            sink, g, g in reset)
+        out = _upload_group(spark, grp, sorted(set(dates[g])), root, sink, g,
+                            g in reset)
         outcomes = out if outcomes is None else outcomes.unionByName(out)
     return outcomes
 
@@ -157,66 +164,50 @@ def _basename(col):
     return F.element_at(F.split(col, "/"), -1)
 
 
-def _listed_filenames(
-    spark: SparkSession, globs: list[str]
-) -> tuple[list[str], DataFrame]:
-    """List the claimed dates' directories once, per glob: returns the globs
-    that matched files and a distributed (filename) listing of them.
-
-    `binaryFile` prunes the `content` column when it isn't selected, so this
-    is a pure FileIndex listing — no file is opened. A vanished or empty date
-    directory (retention cleanup raced the claim) drops out of both instead
-    of failing the whole group; any other listing error raises into the
-    group's isolation path.
-    """
-    found: list[str] = []
-    listed = local_values_df(spark, [], "path string")
-    for g in globs:
-        try:
-            part = spark.read.format("binaryFile").load(g).select("path")
-        except AnalysisException as exc:
-            if exc.getCondition() != "PATH_NOT_FOUND":
-                raise
-            logger.warning("claimed date directory missing: %s", g)
-            continue
-        listed = part if not found else listed.unionByName(part)
-        found.append(g)
-    return found, listed.select(_basename(F.col("path")).alias("filename"))
-
-
 def _upload_group(
     spark: SparkSession,
     claimed: DataFrame,
     dates: list[str],
-    dir_for_date,
+    root: str,
     sink: Sink,
     sink_batch: int,
     reset: bool,
 ) -> DataFrame:
-    names = claimed.select("filename")
+    rows = claimed.select("filename", "create_date", "sink_batch")
+    # the one glob: it matches only the date directories that exist, and
+    # binaryFile prunes `content`, so listing it opens no file
+    glob = os.path.join(root, "{" + ",".join(dates) + "}", "*")
     try:
-        # the one listing: the scan reads only the directories it found, so
-        # a vanished directory scans nothing instead of failing the cycle
-        found, listed = _listed_filenames(
-            spark, [os.path.join(dir_for_date(d), "*") for d in dates]
-        )
+        try:
+            listed = spark.read.format("binaryFile").load(glob).select("path")
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+            logger.warning("no claimed date directory left: %s", glob)
+            return rows.withColumn("ok", F.lit(False))
         ticks = (
-            read_ticks_csv(spark, found)
+            read_ticks_csv(spark, glob)
             .withColumn("filename", _basename(F.col("_source_file")))
             .drop("_source_file")
             # lineage join: keep only claimed files (the glob may sweep in
             # same-day files that are not READY yet); filenames are globally
             # unique (the registry dedups on filename), so basename suffices
-            .join(names, "filename", "left_semi")
+            .join(claimed.select("filename"), "filename", "left_semi")
         )
         if reset:
             sink.reset_batch(sink_batch)
         sink.write(ticks.drop("filename"), batch_id=sink_batch)
         # ok comes from the listing, not assumed: a claimed file it does
-        # not hold committed zero rows and rolls up ERROR, not FINISHED
-        return names.join(
-            listed.withColumn("_seen", F.lit(True)), "filename", "left"
-        ).select("filename", F.coalesce("_seen", F.lit(False)).alias("ok"))
+        # not hold committed zero rows and rolls up ERROR, not FINISHED.
+        # (create_date, filename) names one path, so each claim row keeps
+        # exactly one outcome.
+        seen = path_to_registry_cols(listed).select(
+            "create_date", "filename", F.lit(True).alias("ok")
+        )
+        return rows.join(seen, ["create_date", "filename"], "left").select(
+            "filename", "create_date", "sink_batch",
+            F.coalesce("ok", F.lit(False)).alias("ok"),
+        )
     except Exception:
         logger.exception(
             "upload batch %s failed; isolating per file", sink_batch
@@ -229,15 +220,12 @@ def _upload_group(
     # multiple writes under the same batch_id would clobber each other.
     # Collecting the (date, filename) pairs here is the RARE failure path,
     # never the hot path.
-    rows = [
-        (str(r["create_date"]), r["filename"])
-        for r in claimed.select("create_date", "filename").collect()
-    ]
-    outcomes, good_dfs, good_files = [], [], []
-    for d, f in rows:
+    good_dfs, good_files, committed = [], [], []
+    for r in claimed.select("create_date", "filename").collect():
+        f = r["filename"]
         try:
             one = read_ticks_csv(
-                spark, os.path.join(dir_for_date(d), f)
+                spark, os.path.join(root, str(r["create_date"]), f)
             ).drop("_source_file")
             # force the parse to surface per-file errors; count() is
             # disallowed here (corrupt-record-only column pruning)
@@ -246,7 +234,6 @@ def _upload_group(
             good_files.append(f)
         except Exception:
             logger.exception("file %s failed to parse", f)
-            outcomes.append((f, False))
     if good_dfs:
         combined = good_dfs[0]
         for df in good_dfs[1:]:
@@ -261,8 +248,7 @@ def _upload_group(
             # again) by the next cycle, never silently duplicated.
             sink.reset_batch(sink_batch)
             sink.write(combined, batch_id=sink_batch)
-            outcomes.extend((f, True) for f in good_files)
+            committed = good_files
         except Exception:
             logger.exception("retry write for batch %s failed", sink_batch)
-            outcomes.extend((f, False) for f in good_files)
-    return local_values_df(spark, outcomes, "filename string, ok boolean")
+    return rows.withColumn("ok", F.col("filename").isin(committed))

@@ -56,9 +56,7 @@ def test_upload_fallback_preserves_all_files_under_idempotent_sink(spark, tmp_pa
             super().write(df, batch_id=batch_id)
 
     sink = FlakyIdempotent(str(tmp_path / "out"))
-    res = run_upload_batch(
-        spark, claimed, lambda d: os.path.join(root, d), sink
-    )
+    res = run_upload_batch(spark, claimed, root, sink)
     assert {r["filename"]: r["ok"] for r in res.collect()} == {"AAA": True, "BBB": True}
     assert sink.read(spark).count() == 5  # ALL rows survived, not just BBB's
 

@@ -86,26 +86,6 @@ def test_streaming_progress_listener(spark, tmp_path):
     assert any(r["state_rows_total"] == 10 for r in rows)  # 10 agg groups
 
 
-def test_observe_counts_rides_the_write_pass(spark):
-    """Observation metrics must equal the exact counts and be collected by
-    the SAME action that writes — no second scan (the assertion: values
-    are available right after one noop write of the observed frame)."""
-    from pyspark.sql import functions as F
-
-    from crypto_data_service_loader_spark.functions.metrics import (
-        observe_counts,
-    )
-
-    df = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 7).alias("v")
-    )
-    observed, obs = observe_counts(df, name="probe", value_col="v")
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    assert got["rows"] == 1000
-    assert got["sum_v"] == sum(i % 7 for i in range(1000))
-
-
 def test_observed_metrics_bounded_wait(spark):
     """ADVICE r5: Observation.get BLOCKS until the observed plan runs an
     action — a sink that never executed the plan would hang the caller.
@@ -113,15 +93,15 @@ def test_observed_metrics_bounded_wait(spark):
     the real metrics once an action has run."""
     import time
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
     from crypto_data_service_loader_spark.functions.metrics import (
-        observe_counts,
         observed_metrics,
     )
 
     df = spark.range(100).select(F.col("id"))
-    observed, obs = observe_counts(df, name="bounded_probe")
+    obs = Observation("bounded_probe")
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     t0 = time.perf_counter()
     assert observed_metrics(obs, timeout=1.0) is None  # no action yet
     assert time.perf_counter() - t0 < 5.0  # bounded, not a hang

@@ -182,20 +182,139 @@ def test_registry_read_error_other_than_missing_path_surfaces(
     assert appended == [] and sink.write_calls == 0
 
 
-def test_upload_listing_error_other_than_missing_path_surfaces(
-    spark, tmp_path
-):
-    """The upload's per-date listing reads a vanished date directory as
-    empty (its claimed files then roll up ERROR); any other listing error
-    raises into the group's isolation path."""
-    from crypto_data_service_loader_spark.streaming.upload import (
-        _listed_filenames,
+def _claim(spark, rows):
+    """A claim frame as the cycle hands it to the upload: (filename,
+    create_date, status, sink_batch) from (filename, date, sink batch)."""
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [(f, dt.date.fromisoformat(d), "READY_FOR_PROCESSING", b)
+         for f, d, b in rows],
+        "filename string, create_date date, status string, sink_batch long",
     )
 
-    gone = str(tmp_path / "data" / "2024-03-13" / "*")
-    assert _listed_filenames(spark, [gone])[1].count() == 0
-    with pytest.raises(Exception, match="nosuchfs"):
-        _listed_filenames(spark, [gone, "nosuchfs://host/2024-03-13/*"])
+
+def _outcomes(out):
+    return sorted((r["filename"], str(r["create_date"]), r["sink_batch"],
+                   r["ok"]) for r in out.collect())
+
+
+def test_upload_listing_error_other_than_missing_path_surfaces(
+    spark, tmp_path, caplog
+):
+    """With every claimed date directory gone the upload writes nothing
+    and settles each claimed file ok=false, without raising; any other
+    listing error (a filesystem scheme nothing implements) reaches the
+    per-file isolation path, where the files settle ok=false too."""
+    import logging
+
+    from crypto_data_service_loader_spark.streaming.upload import (
+        run_upload_batch,
+    )
+
+    claimed = _claim(spark, [("AAA_PST_2024-03-12", "2024-03-12", 4),
+                             ("BBB_PST_2024-03-13", "2024-03-13", 4)])
+    sink = MemorySink()
+    out = run_upload_batch(spark, claimed, str(tmp_path / "data"), sink)
+    assert {r["filename"]: r["ok"] for r in out.collect()} == {
+        "AAA_PST_2024-03-12": False, "BBB_PST_2024-03-13": False}
+    assert sink.write_calls == 0
+
+    with caplog.at_level(logging.ERROR):
+        out = run_upload_batch(spark, claimed, "nosuchfs://host", sink)
+        assert {r["filename"]: r["ok"] for r in out.collect()} == {
+            "AAA_PST_2024-03-12": False, "BBB_PST_2024-03-13": False}
+    assert "isolating per file" in caplog.text and "nosuchfs" in caplog.text
+    assert sink.write_calls == 0
+
+
+def test_upload_returns_one_row_per_claimed_row(spark, tmp_path):
+    """Each claimed row comes back exactly once, with its create_date and
+    sink_batch, whichever path settles it: the main path (a file and a
+    whole date directory missing from disk, an unclaimed file swept in by
+    the glob), the isolation path (the group write fails once) and the
+    path where no claimed directory is left."""
+    from crypto_data_service_loader_spark.streaming.upload import (
+        run_upload_batch,
+    )
+
+    root = str(tmp_path / "data")
+    _mk_tree(root, {
+        "2024-03-12": {"AAA_PST_2024-03-12": [VALID, VALID]},
+        "2024-03-13": {"BBB_PST_2024-03-13": [VALID],
+                       "ZZZ_PST_2024-03-13": [VALID]},
+    })
+    rows = [("AAA_PST_2024-03-12", "2024-03-12", 7),
+            ("BBB_PST_2024-03-13", "2024-03-13", 7),
+            ("CCC_PST_2024-03-13", "2024-03-13", 7),  # not on disk
+            ("DDD_PST_2024-03-14", "2024-03-14", 8)]  # directory gone
+    claimed = _claim(spark, rows)
+    on_disk = {"AAA_PST_2024-03-12", "BBB_PST_2024-03-13"}
+    settled = sorted((f, d, b, f in on_disk) for f, d, b in rows)
+
+    sink = MemorySink()
+    assert _outcomes(run_upload_batch(spark, claimed, root, sink)) == settled
+    assert sum(len(b) for _, b in sink.batches) == 3  # ZZZ's row stays out
+
+    flaky = MemorySink(fail_times=1)
+    assert _outcomes(run_upload_batch(spark, claimed, root, flaky)) == settled
+    assert sum(len(b) for _, b in flaky.batches) == 3
+
+    gone = MemorySink()
+    out = run_upload_batch(spark, claimed, str(tmp_path / "empty"), gone)
+    assert _outcomes(out) == sorted((f, d, b, False) for f, d, b in rows)
+    assert gone.write_calls == 0
+
+
+def test_warm_cycle_job_budget(spark, tmp_path):
+    """A warm `run_cycle` (10 new files in 2 new past-date directories,
+    HTTP sink, cleanup on) runs at most 20 Spark jobs: each claimed file
+    settles in one outcome row, so the rollup is a projection with no
+    aggregate or join of its own. Every file ends FINISHED and every row
+    lands once."""
+    from crypto_data_service_loader_spark.sinks.clickhouse_http import (
+        ClickHouseHttpSink,
+    )
+    from tests.clickhouse_fake import FakeClickHouse
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # noqa: SLF001 — no Python API
+    tracker = sc.statusTracker()
+
+    def last_job():
+        bus.waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    root = str(tmp_path / "data")
+    reg = str(tmp_path / "reg")
+    fake = FakeClickHouse()
+    url = fake.start()
+    try:
+        sink = ClickHouseHttpSink(url, "ticks")
+        sink.execute("CREATE TABLE ticks (line String) ENGINE = MergeTree "
+                     "PARTITION BY batch_id ORDER BY tuple()")
+        jobs = []
+        for cycle in range(3):
+            _mk_tree(root, {
+                f"2024-03-{2 * cycle + d:02d}": {
+                    f"T{i}C{cycle}_PST_2024-03-{2 * cycle + d:02d}":
+                        [VALID] * 4
+                    for i in range(5)
+                }
+                for d in (1, 2)
+            })
+            before = last_job()
+            stats = run_cycle(spark, root, reg, sink, today="2024-03-20",
+                              cycle=cycle, do_cleanup=True)
+            jobs.append(last_job() - before)
+            assert stats["uploaded"] == 10 and stats["failed"] == 0
+        assert len(fake.tables["ticks"]) == 3 * 10 * 4
+        assert fake.duplicate_inserts_dropped == 0
+    finally:
+        fake.stop()
+    state = RegistryLog(spark, reg).state()
+    assert state.filter(F.col("status") != "FINISHED").count() == 0
+    assert jobs[2] <= 20, jobs
 
 
 def test_polling_and_streaming_share_one_cycle(spark, tmp_path):

@@ -101,19 +101,18 @@ def test_upload_batch_rollup_success_and_failure(spark, tmp_path):
          ("BBB_PST_2024-03-13", D(2024, 3, 13), "READY_FOR_PROCESSING")],
         REGISTRY,
     )
-    path_for = lambda d: os.path.join(root, d)
     # the claim set as the cycle hands it over: each file under a sink batch
     batch = lambda b: claimed.withColumn("sink_batch", F.lit(b).cast("long"))
 
     sink = MemorySink()
-    res = run_upload_batch(spark, batch(1), path_for, sink)
+    res = run_upload_batch(spark, batch(1), root, sink)
     statuses = {r["filename"]: r["status"] for r in upload_status_rollup(res).collect()}
     assert statuses == {"AAA_PST_2024-03-13": "FINISHED", "BBB_PST_2024-03-13": "FINISHED"}
     assert sum(len(b[1]) for b in sink.batches) == 3  # all valid rows landed
 
     # failure injection: sink always fails -> every file goes ERROR
     bad = MemorySink(fail_times=99)
-    res2 = run_upload_batch(spark, batch(2), path_for, bad)
+    res2 = run_upload_batch(spark, batch(2), root, bad)
     statuses2 = {r["filename"]: r["status"] for r in upload_status_rollup(res2).collect()}
     assert set(statuses2.values()) == {"ERROR"}
 
@@ -121,7 +120,7 @@ def test_upload_batch_rollup_success_and_failure(spark, tmp_path):
     # succeeds -> FINISHED for every file (finer than the reference's
     # per-bundle ERROR, SURVEY.md §7)
     flaky = MemorySink(fail_times=1)
-    res3 = run_upload_batch(spark, batch(3), path_for, flaky)
+    res3 = run_upload_batch(spark, batch(3), root, flaky)
     statuses3 = {r["filename"]: r["status"] for r in upload_status_rollup(res3).collect()}
     assert set(statuses3.values()) == {"FINISHED"}
     assert sum(len(b[1]) for b in flaky.batches) == 3  # rows landed per-file

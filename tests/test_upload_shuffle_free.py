@@ -87,8 +87,7 @@ def test_upload_write_plan_has_no_exchange(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(cls, "mapInArrow", spy)
     fake, sink = _fake_sink()
     try:
-        out = run_upload_batch(spark, claimed, lambda d: os.path.join(root, d),
-                               sink)
+        out = run_upload_batch(spark, claimed, root, sink)
         assert all(r["ok"] for r in out.collect())
     finally:
         fake.stop()
@@ -109,7 +108,7 @@ def test_small_batch_posts_at_most_default_parallelism(spark, tmp_path):
     fake, sink = _fake_sink()
     try:
         out = run_upload_batch(spark, _claimed(spark, tmp_path, names),
-                               lambda d: os.path.join(root, d), sink)
+                               root, sink)
         assert {r["filename"]: r["ok"] for r in out.collect()} == {
             n: True for n, _ in names
         }

@@ -63,8 +63,7 @@ def _setup(spark, tmp_path, n_good=40, n_poison=8, **fake_kw):
         "CREATE TABLE IF NOT EXISTS tickers_data (x String) ENGINE = Null"
     )
     claimed = _claimed(spark, ["AAA_PST_2024-03-13", "BBB_PST_2024-03-13"])
-    dir_for_date = lambda d: os.path.join(root, d)  # noqa: E731
-    return fake, sink, claimed, dir_for_date
+    return fake, sink, claimed, root
 
 
 def _stored_lines(fake):
@@ -77,9 +76,9 @@ def test_transient_mid_stream_failure_retries_and_commits_once(
     """Two injected 500s on the poison chunk; the third (in-budget)
     attempt lands. Every row exactly once, both files FINISHED, and the
     marker chunk was posted exactly maxFlushDataAttempts times."""
-    fake, sink, claimed, dfd = _setup(spark, tmp_path, fail_marker_times=2)
+    fake, sink, claimed, root = _setup(spark, tmp_path, fail_marker_times=2)
     try:
-        out = run_upload_batch(spark, claimed, dfd, sink)
+        out = run_upload_batch(spark, claimed, root, sink)
         got = {r["filename"]: r["ok"] for r in out.collect()}
         assert got == {"AAA_PST_2024-03-13": True, "BBB_PST_2024-03-13": True}
         lines = _stored_lines(fake)
@@ -95,10 +94,10 @@ def test_ambiguous_failure_deduped_by_token(spark, tmp_path):
     client's retry re-POSTs the identical chunk under the SAME
     insert_deduplication_token and the server drops it — rows exactly
     once, no ERROR."""
-    fake, sink, claimed, dfd = _setup(spark, tmp_path,
-                                      ambiguous_marker_times=1)
+    fake, sink, claimed, root = _setup(spark, tmp_path,
+                                       ambiguous_marker_times=1)
     try:
-        out = run_upload_batch(spark, claimed, dfd, sink)
+        out = run_upload_batch(spark, claimed, root, sink)
         assert all(r["ok"] for r in out.collect())
         lines = _stored_lines(fake)
         assert len(lines) == 52
@@ -118,10 +117,10 @@ def test_attempts_exhaustion_rolls_up_error_without_double_count(
     own 3 attempts, and the bundle rolls up ERROR — reference
     maxFlushDataAttempts -> per-bundle ERROR semantics. Every surviving
     stored row is unique."""
-    fake, sink, claimed, dfd = _setup(spark, tmp_path,
-                                      fail_marker_times=10**9)
+    fake, sink, claimed, root = _setup(spark, tmp_path,
+                                       fail_marker_times=10**9)
     try:
-        out = run_upload_batch(spark, claimed, dfd, sink)
+        out = run_upload_batch(spark, claimed, root, sink)
         got = {r["filename"]: r["ok"] for r in out.collect()}
         assert got == {
             "AAA_PST_2024-03-13": False, "BBB_PST_2024-03-13": False,
@@ -150,11 +149,11 @@ def test_reset_batch_falls_back_to_mutation_on_unpartitioned_table(
     every retry cycle (which left the first attempt's partial chunks
     committed while the files looped in ERROR). Same no-double-count
     invariant as the partitioned-table test."""
-    fake, sink, claimed, dfd = _setup(spark, tmp_path,
-                                      fail_marker_times=10**9)
+    fake, sink, claimed, root = _setup(spark, tmp_path,
+                                       fail_marker_times=10**9)
     fake.partition_by_batch = False
     try:
-        out = run_upload_batch(spark, claimed, dfd, sink)
+        out = run_upload_batch(spark, claimed, root, sink)
         got = {r["filename"]: r["ok"] for r in out.collect()}
         assert got == {
             "AAA_PST_2024-03-13": False, "BBB_PST_2024-03-13": False,
