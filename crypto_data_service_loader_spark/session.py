@@ -8,7 +8,9 @@ timezone so results compare bit-for-bit against the DuckDB oracle.
 The codegen cache holds the engine's whole working set of generated
 classes (1024, not Spark's 100): the service runs the same plans every
 cycle and the suite the same keys every pass, so each class is compiled
-and JIT-warmed once per JVM instead of once per run.
+and JIT-warmed once per JVM instead of once per run. Class names leave out
+the codegen stage id, which adaptive execution assigns in stage completion
+order, so a plan keeps its classes whichever stage finishes first.
 
 On a real cluster the same builder applies — only master/memory change; the
 operator code never assumes local mode.
@@ -113,6 +115,10 @@ def get_spark(
         # JIT warms every fresh class again. Static: fixed when the JVM
         # first generates code.
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # Adaptive execution numbers codegen stages in the order concurrent
+        # stages finish, and the stage id is part of the class name: a new
+        # finishing order would compile an unchanged plan's classes again.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

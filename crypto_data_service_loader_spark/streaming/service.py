@@ -16,12 +16,14 @@ Cycle semantics (reference MainApplication.java:54-91), held once in
                   retention window
 
 State lives in an append-only registry event log (parquet, date-partitioned
-at scale). A cycle reads it once: steps 1-3 are pure DataFrame functions of
-that one state, made durable in ONE append before the upload (the claim is
-on disk before any row is written), and the rollup is the second append.
-Events carry seq = cycle*10 + {0,1,2,3} (discover, progress, claim,
-rollup), so a replayed cycle is idempotent. Every `COMPACT_EVERY` cycles
-the log is compacted to one event per file.
+at scale). A cycle reads it once: the listing enters that read as
+DISCOVERED events at seq -1, and one latest-wins pass gives the cycle's
+state, one row per file, of which steps 1-3 are columns. That frame is
+pinned; its events are made durable in ONE append before the upload (the
+claim is on disk before any row is written), and the rollup is the second
+append. Events carry seq = cycle*10 + {0,1,2,3} (discover, progress,
+claim, rollup), so a replayed cycle is idempotent. Every `COMPACT_EVERY`
+cycles the log is compacted to one event per file.
 """
 
 from __future__ import annotations
@@ -36,9 +38,9 @@ from ..functions.localrel import local_values_df
 from ..functions.metrics import observed_metrics
 from ..operators.registry import (
     current_state,
-    dedup_new_files,
     transition_statuses,
-    # unused here; perfbench/workloads.py's tracer wraps it by this name
+    # not called here; perfbench/workloads.py's tracer wraps both by name
+    dedup_new_files,  # noqa: F401
     upload_status_rollup,  # noqa: F401
 )
 from ..schemas import REGISTRY_EVENTS
@@ -108,7 +110,8 @@ class RegistryLog:
         return current_state(self.events())
 
     def append(self, rows: DataFrame) -> None:
-        rows.select(*[f.name for f in REGISTRY_EVENTS.fields]).write.mode(
+        # one parquet file per append, however `rows` is partitioned
+        rows.select(*REGISTRY_EVENTS.fieldNames()).coalesce(1).write.mode(
             "append"
         ).parquet(self.path)
 
@@ -276,58 +279,55 @@ def _run_core(
 ) -> tuple[dict, DataFrame]:
     """One cycle over `listing` (filename, create_date rows): discover,
     progress, claim, upload, rollup. Returns the counters and the registry
-    state after the cycle, built without reading the log again."""
+    state after the cycle as (filename, create_date, status) rows, built
+    from the cycle's two pinned frames without reading the log again."""
     log = RegistryLog(spark, registry_path)
-    logged = log.events()  # the cycle's one read of the log
-    state = current_state(logged)
-    # a delta holds only this cycle's events, so seq % 10 tells their
-    # kind; a `cycle * 10 + k` literal would be written into the generated
-    # code and compile fresh classes every cycle
-    kind = F.col("seq") % 10
 
-    def as_events(df: DataFrame, status, k: int, batch, *extra) -> DataFrame:
+    def as_events(df: DataFrame, status, k: int, batch) -> DataFrame:
         return df.select(
             "filename", "create_date", status.alias("status"),
             F.lit(cycle * 10 + k).cast("long").alias("seq"),
-            batch.cast("long").alias("batch_id"), *extra,
+            batch.cast("long").alias("batch_id"),
         )
 
-    # 1. discover (reference Flow 1: backfill scan + dedup + insert)
-    found = as_events(
-        dedup_new_files(listing.select("filename", "create_date"),
-                        state.select("filename")),
-        F.lit("DISCOVERED"), 0, F.lit(cycle),
+    # 1. discover (reference Flow 1: backfill scan + dedup + insert). The
+    # listing joins the log read as seq -1 events, below every real seq:
+    # latest-wins keeps a registered file's own latest event, and a file
+    # the log lacks comes out as its listed DISCOVERED row.
+    listed = listing.select(
+        "filename", "create_date", F.lit("DISCOVERED").alias("status"),
+        F.lit(-1).cast("long").alias("seq"),
+        F.lit(None).cast("long").alias("batch_id"),
     )
+    state = current_state(log.events().unionByName(listed))  # one log read
     # 2. progress (reference Flow 2: the status-machine CASE)
     progressed = transition_statuses(
-        state.unionByName(found).withColumn("_was", F.col("status")), today
+        state.withColumn("_was", F.col("status")), today
     )
-    moved = as_events(progressed.filter(F.col("status") != F.col("_was")),
-                      F.col("status"), 1, F.lit(cycle))
     # 3. claim (reference Flow 3; stale IN_PROGRESS claims orphaned by a
     # crashed older cycle are reclaimed). It reads batch_id only on
-    # IN_PROGRESS and FINISHED rows, which the transitions never touch, so
-    # the progressed state gives the claim the appended log would. The
+    # IN_PROGRESS and FINISHED rows, which the transitions never touch. The
     # claim event records sink_batch, not the cycle: a reclaimed file keeps
     # its original claim batch across any number of retries, so every
     # re-upload overwrites the same idempotent sink partition.
-    claim = claim_ready_files(progressed, current_batch=cycle)
-    claims = as_events(claim, F.lit("IN_PROGRESS"), 2, F.col("sink_batch"),
-                       "sink_batch", F.col("status").alias("claimed_from"))
-    delta, stats = _pin(
-        found.unionByName(moved).unionByName(claims, allowMissingColumns=True),
-        discovered=kind == 0, progressed=kind == 1,
+    found, moved = F.col("seq") == -1, F.col("status") != F.col("_was")
+    claimed = F.col("sink_batch").isNotNull()
+    files, stats = _pin(
+        claim_ready_files(progressed, current_batch=cycle),
+        discovered=found, progressed=moved,
     )
-    log.append(delta)  # the claim is durable before the upload
+    log.append(  # the claim is durable before the upload
+        as_events(files.filter(found), F.lit("DISCOVERED"), 0, F.lit(cycle))
+        .unionByName(as_events(files.filter(moved), F.col("status"), 1,
+                               F.lit(cycle)))
+        .unionByName(as_events(files.filter(claimed), F.lit("IN_PROGRESS"),
+                               2, F.col("sink_batch")))
+    )
 
     # 4. upload + rollup. The rollup records sink_batch as batch_id: that
     # is what makes a sink batch's membership recoverable, so a later
     # reclaim can rewrite the WHOLE partition (see claim_ready_files).
-    ready = delta.filter(kind == 2).select(
-        "filename", "create_date", F.col("claimed_from").alias("status"),
-        "sink_batch",
-    )
-    outcomes = run_upload_batch(spark, ready, root, sink)
+    outcomes = run_upload_batch(spark, files.filter(claimed), root, sink)
     # each claimed file has one outcome row, so its rollup is a projection
     ok, status = F.col("ok"), F.col("status")
     rollup, done = _pin(
@@ -339,21 +339,24 @@ def _run_core(
     stats.update(done)
 
     if cycle > 0 and cycle % COMPACT_EVERY == 0:
-        log.compact()  # the state above reads files compaction deletes
-        return stats, log.state()
-    after = logged.unionByName(delta.select(*REGISTRY_EVENTS.fieldNames()))
-    return stats, current_state(after.unionByName(rollup))
+        log.compact()  # the pinned frames below no longer read the log
+    # a claimed file's rollup row replaces its pinned row
+    cols = ("filename", "create_date", "status")
+    return stats, files.filter(~claimed).select(*cols).unionByName(
+        rollup.select(*cols)
+    )
 
 
 def _pin(df: DataFrame, **counters) -> tuple[DataFrame, dict[str, int]]:
     """Materialize `df` once and count each named boolean column of
     `counters` on the same job's tasks (an Observation: no counter job).
+    The core pins two frames: the cycle's state, one row per file with its
+    discover/progress/claim columns, and the rollup events.
 
     localCheckpoint, not .cache(): an append's recacheByPath would
     re-materialize a cached frame with a fresh listing of the log, and the
-    step would see its own output. One partition: the rows are a cycle's
-    per-file events, so the log gains one file per append and every later
-    step over them runs one task, not one per unioned branch."""
+    step would see its own output. One partition: every later step over
+    the frame runs one task, not one per shuffle partition."""
     obs = Observation()
     pinned = df.coalesce(1).observe(
         obs, *[F.count_if(c).alias(k) for k, c in counters.items()]

@@ -46,10 +46,9 @@ import logging
 import os
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.localrel import local_values_df
-from ..operators.registry import filter_status_in
 from ..sinks.writers import Sink
 from ..sources.csv_ingest import read_ticks_csv
 from ..sources.fs_scan import path_to_registry_cols
@@ -58,22 +57,23 @@ logger = logging.getLogger(__name__)
 
 
 def claim_ready_files(registry: DataFrame, current_batch: int) -> DataFrame:
-    """EP2 step 1: select READY_FOR_PROCESSING — the optimistic claim. In the
-    event-log registry the IN_PROGRESS event is appended by the caller with
-    this batch's id, making the claim idempotent per epoch.
+    """EP2 step 1: the optimistic claim, as a `sink_batch` column on every
+    registry row: null means unclaimed. The caller appends an IN_PROGRESS
+    event under that batch for each claimed row, making the claim
+    idempotent per epoch.
 
-    IN_PROGRESS claims from `current_batch` or older batches are RECLAIMED:
-    a crash between the claim append and the FINISHED/ERROR rollup would
-    otherwise leave those files stuck forever (the reference has the same
-    gap — a killed process orphans its IN_PROGRESS rows).
-    `batch_id <= current` (not `<`) so a replayed epoch re-claims its OWN
-    crashed attempt's files under the same stable cycle id.
+    READY_FOR_PROCESSING rows are claimed under `current_batch`.
 
-    The result carries `sink_batch`: fresh claims get `current_batch`,
-    reclaimed files keep the batch id recorded on their IN_PROGRESS event —
-    which the claim append preserves across retries — so re-uploads always
-    overwrite the original sink partition (no duplicates when the crash
-    happened after the sink commit).
+    IN_PROGRESS claims from `current_batch` or older batches are RECLAIMED
+    under the batch id recorded on their IN_PROGRESS event, which the
+    claim append preserves across retries: a crash between the claim
+    append and the FINISHED/ERROR rollup would otherwise leave those files
+    stuck forever (the reference has the same gap — a killed process
+    orphans its IN_PROGRESS rows), and each re-upload overwrites the
+    original sink partition (no duplicates when the crash happened after
+    the sink commit). `batch_id <= current` (not `<`) so a replayed epoch
+    re-claims its OWN crashed attempt's files under the same stable cycle
+    id.
 
     Reclaim rewrites a whole sink partition, so the retry's write set must
     equal the batch's FULL original membership: if a mid-commit crash of the
@@ -81,36 +81,19 @@ def claim_ready_files(registry: DataFrame, current_batch: int) -> DataFrame:
     IN_PROGRESS, retrying only the stuck subset would overwrite the
     partition WITHOUT the finished files' rows — silently deleting committed
     data. FINISHED files sharing a reclaimed sink batch (their rollup event
-    records sink_batch as batch_id) are therefore re-claimed as companions:
-    their rows are rewritten byte-identically into the same partition.
+    records sink_batch as batch_id) are therefore re-claimed as companions,
+    found by a window over `batch_id`: their rows are rewritten
+    byte-identically into the same partition.
     """
-    ready = filter_status_in(registry, ["READY_FOR_PROCESSING"]).withColumn(
-        "sink_batch", F.lit(int(current_batch)).cast("long")
-    )
-    stale = registry.filter(
-        (F.col("status") == "IN_PROGRESS") & (F.col("batch_id") <= current_batch)
-    ).withColumn(
+    status, batch = F.col("status"), F.col("batch_id")
+    stale = (status == "IN_PROGRESS") & (batch <= current_batch)
+    reclaimed = F.max(stale).over(Window.partitionBy("batch_id"))
+    return registry.withColumn(
         "sink_batch",
-        F.coalesce(F.col("batch_id"), F.lit(int(current_batch))).cast("long"),
-    )
-    # Companions: FINISHED files whose rollup recorded the same sink batch
-    # as a file being reclaimed. Their committed rows live in the partition
-    # the retry is about to overwrite, so they must ride along. Batches with
-    # no stuck file are untouched (semi-join keeps this claim-set-sized).
-    reclaimed_batches = stale.select(
-        F.col("sink_batch").alias("_reclaim_batch")
-    ).distinct()
-    companions = (
-        registry.filter(F.col("status") == "FINISHED")
-        .join(
-            reclaimed_batches,
-            F.col("batch_id") == F.col("_reclaim_batch"),
-            "left_semi",
-        )
-        .withColumn("sink_batch", F.col("batch_id").cast("long"))
-    )
-    return ready.unionByName(stale, allowMissingColumns=True).unionByName(
-        companions, allowMissingColumns=True
+        F.when(status == "READY_FOR_PROCESSING",
+               F.lit(int(current_batch)).cast("long"))
+        .when(stale | ((status == "FINISHED") & reclaimed),
+              batch.cast("long")),
     )
 
 
@@ -123,8 +106,8 @@ def run_upload_batch(
     """Load every claimed file's CSV rows from the `root/<date>/` tree,
     bulk-write via `sink`, and return one (filename, create_date,
     sink_batch, ok) outcome row per claimed row for the O19 status rollup.
-    `claimed` rows carry (filename, create_date, status, sink_batch), as
-    `claim_ready_files` gives them.
+    `claimed` rows carry (filename, create_date, status, sink_batch): the
+    rows `claim_ready_files` gives a non-null `sink_batch`.
 
     Writes one sink batch per distinct `sink_batch` group (normally exactly
     one; one extra per crashed predecessor being retried), each under its

@@ -18,12 +18,16 @@ import datetime
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_data_service_loader_spark.schemas import REGISTRY_EVENTS
 from crypto_data_service_loader_spark.sinks.idempotent import IdempotentParquetSink
+from crypto_data_service_loader_spark.sources.fs_scan import scan_directory
 from crypto_data_service_loader_spark.streaming.service import (
+    COMPACT_EVERY,
     RegistryLog,
+    _run_core,
     _stable_cycle_base,
     run_cycle,
 )
@@ -208,6 +212,74 @@ def test_replayed_epoch_reclaims_its_own_crashed_claim(spark, tmp_path):
     ready = claim_ready_files(log.state(), current_batch=5)
     rows = ready.collect()
     assert len(rows) == 1 and rows[0]["sink_batch"] == 5
+
+
+def test_claim_marks_every_state_row(spark):
+    """The claim is a column on every state row: READY rows get the current
+    batch, stale IN_PROGRESS rows and the FINISHED rows of their batch keep
+    their own batch, and every other row is left unclaimed (null)."""
+    d = D(2024, 3, 13)
+    state = spark.createDataFrame([
+        ("READY", d, "READY_FOR_PROCESSING", 41, 4),
+        ("STALE", d, "IN_PROGRESS", 22, 2),
+        ("OWN", d, "IN_PROGRESS", 52, 5),
+        ("AHEAD", d, "IN_PROGRESS", 62, 6),
+        ("COMPANION", d, "FINISHED", 23, 2),
+        ("DONE", d, "FINISHED", 33, 3),
+        ("AHEAD_DONE", d, "FINISHED", 63, 6),
+        ("FAILED", d, "ERROR", 23, 2),
+        ("NEW", d, "DISCOVERED", 20, 2),
+        ("TODAY", d, "DOWNLOADING", 21, 2),
+    ], REGISTRY_EVENTS)
+    got = {r["filename"]: r["sink_batch"] for r in
+           claim_ready_files(state, current_batch=5).collect()}
+    assert got == {
+        "READY": 5, "STALE": 2, "OWN": 5, "AHEAD": None,
+        "COMPANION": 2, "DONE": None, "AHEAD_DONE": None,
+        "FAILED": None, "NEW": None, "TODAY": None,
+    }
+
+
+@pytest.mark.parametrize("cycle", [2, COMPACT_EVERY])
+def test_cycle_returns_the_logged_state(spark, tmp_path, cycle):
+    """The post-cycle state the core hands to cleanup, built from its
+    pinned frames, is the state the log holds after the cycle, with or
+    without compaction. The cycle discovers a file, moves one to
+    DOWNLOADING, reclaims a stale file with its FINISHED companion and
+    rolls a file whose directory is gone up ERROR."""
+    root = str(tmp_path / "data")
+    reg_path = str(tmp_path / "registry")
+    for name in ("STALE", "COMPANION", "NEW"):
+        _mk_file(root, "2024-03-13", f"{name}_PST_2024-03-13")
+    _mk_file(root, "2024-03-14", "TODAY_PST_2024-03-14")
+    log = RegistryLog(spark, reg_path)
+    d13, d12 = D(2024, 3, 13), D(2024, 3, 12)
+    _append(log, [
+        ("OLD_PST_2024-03-12", d12, "FINISHED", 3, 0),
+        # cycle 1 crashed mid-rollup: only COMPANION's FINISHED landed
+        ("STALE_PST_2024-03-13", d13, "IN_PROGRESS", 12, 1),
+        ("COMPANION_PST_2024-03-13", d13, "IN_PROGRESS", 12, 1),
+        ("COMPANION_PST_2024-03-13", d13, "FINISHED", 13, 1),
+        ("GONE_PST_2024-03-12", d12, "DOWNLOADING", 11, 1),
+    ])
+    sink = IdempotentParquetSink(str(tmp_path / "out"))
+    stats, after = _run_core(spark, scan_directory(spark, root), root,
+                             reg_path, sink, "2024-03-14", cycle)
+    assert stats == {"discovered": 2, "progressed": 3, "uploaded": 3,
+                     "failed": 1}
+
+    def rows(df):
+        return sorted(tuple(r) for r in
+                      df.select("filename", "create_date", "status").collect())
+
+    assert rows(after) == rows(log.state()) == [
+        ("COMPANION_PST_2024-03-13", d13, "FINISHED"),
+        ("GONE_PST_2024-03-12", d12, "ERROR"),
+        ("NEW_PST_2024-03-13", d13, "FINISHED"),
+        ("OLD_PST_2024-03-12", d12, "FINISHED"),
+        ("STALE_PST_2024-03-13", d13, "FINISHED"),
+        ("TODAY_PST_2024-03-14", D(2024, 3, 14), "DOWNLOADING"),
+    ]
 
 
 def test_compaction_crash_between_renames_recovers(spark, tmp_path):

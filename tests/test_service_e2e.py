@@ -25,6 +25,12 @@ def _mk_tree(root, dates_files):
                 fh.write("\n".join(lines))
 
 
+def _log_files(reg):
+    if not os.path.isdir(reg):
+        return 0
+    return sum(f.endswith(".parquet") for f in os.listdir(reg))
+
+
 def test_service_cycles_end_to_end(spark, tmp_path):
     root = str(tmp_path / "data")
     reg = str(tmp_path / "registry")
@@ -268,10 +274,11 @@ def test_upload_returns_one_row_per_claimed_row(spark, tmp_path):
 
 def test_warm_cycle_job_budget(spark, tmp_path):
     """A warm `run_cycle` (10 new files in 2 new past-date directories,
-    HTTP sink, cleanup on) runs at most 20 Spark jobs: each claimed file
-    settles in one outcome row, so the rollup is a projection with no
-    aggregate or join of its own. Every file ends FINISHED and every row
-    lands once."""
+    HTTP sink, cleanup on) runs at most 15 Spark jobs: the state window
+    runs once, over the log and the listing, and discover, progress,
+    claim and cleanup all read its one pinned frame. The log gains one
+    file per append, two per cycle. Every file ends FINISHED and every
+    row lands once."""
     from crypto_data_service_loader_spark.sinks.clickhouse_http import (
         ClickHouseHttpSink,
     )
@@ -293,7 +300,7 @@ def test_warm_cycle_job_budget(spark, tmp_path):
         sink = ClickHouseHttpSink(url, "ticks")
         sink.execute("CREATE TABLE ticks (line String) ENGINE = MergeTree "
                      "PARTITION BY batch_id ORDER BY tuple()")
-        jobs = []
+        jobs, parts = [], []
         for cycle in range(3):
             _mk_tree(root, {
                 f"2024-03-{2 * cycle + d:02d}": {
@@ -303,10 +310,11 @@ def test_warm_cycle_job_budget(spark, tmp_path):
                 }
                 for d in (1, 2)
             })
-            before = last_job()
+            before, logged = last_job(), _log_files(reg)
             stats = run_cycle(spark, root, reg, sink, today="2024-03-20",
                               cycle=cycle, do_cleanup=True)
             jobs.append(last_job() - before)
+            parts.append(_log_files(reg) - logged)
             assert stats["uploaded"] == 10 and stats["failed"] == 0
         assert len(fake.tables["ticks"]) == 3 * 10 * 4
         assert fake.duplicate_inserts_dropped == 0
@@ -314,7 +322,8 @@ def test_warm_cycle_job_budget(spark, tmp_path):
         fake.stop()
     state = RegistryLog(spark, reg).state()
     assert state.filter(F.col("status") != "FINISHED").count() == 0
-    assert jobs[2] <= 20, jobs
+    assert jobs[2] <= 15, jobs
+    assert parts == [2, 2, 2], parts
 
 
 def test_polling_and_streaming_share_one_cycle(spark, tmp_path):
@@ -359,7 +368,7 @@ def test_polling_and_streaming_share_one_cycle(spark, tmp_path):
 
 def test_polling_cycle_compacts_every_compact_every(spark, tmp_path):
     """`run_cycle` compacts the log on every COMPACT_EVERY-th cycle, and
-    that cycle's cleanup reads the compacted log."""
+    that cycle's cleanup still gets the cycle's state."""
     from crypto_data_service_loader_spark.streaming.service import (
         COMPACT_EVERY,
     )
