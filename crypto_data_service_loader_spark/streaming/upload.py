@@ -10,24 +10,24 @@ straight from the CSV scan's partitions, with no shuffle between the scan
 and the POST (nothing downstream reads a row order) — and
 compression/pipelining belong to the sink transport.
 
-One glob settles each sink batch: `<root>/{d1,d2,...}/*` over the
-batch's claimed dates lists the directories that exist, and the CSV scan
-reads the same glob. A claimed file's outcome is whether that listing
-holds it: a file missing from disk (retention cleanup raced the claim,
-or its whole directory is gone) rolls up ERROR, since the write committed
-no rows for it, and when no claimed directory is left nothing is written
-at all. Any other failure of the listing, scan or write sends the batch
-to a per-file isolation path (finer than the reference's per-bundle
-ERROR granularity). Each claimed file has exactly one outcome row, so
-the rollup is a projection of the claim rows.
+One listing settles each sink batch: the CSV scan reads the glob
+`<root>/{d1,d2,...}/*` over the batch's claimed dates, and the scan's own
+file index is that listing. Only dates enter the glob, never file names.
+The driver matches the index against the claimed (date, filename) pairs
+and filters the scan to the matched paths: no join. The index and
+`input_file_name()` spell a path URI-encoded (`A%20B`), while the registry
+holds the decoded name (`A B`), so the index's paths are decoded for the
+match and the filter compares encoded paths with encoded paths. A claimed
+file the index does not hold (retention cleanup raced the claim, or its
+whole directory is gone) committed no rows and rolls up ERROR; when no
+claimed directory is left nothing is written at all. Any other failure of
+the scan or write sends the batch to a per-file isolation path (finer than
+the reference's per-bundle ERROR granularity). Each claimed file has
+exactly one outcome row, a projection of the claim rows.
 
-Scale contract: the claim set is NEVER collected on the driver. The hot
-path collects one provably tiny set — the distinct (sink batch, claim
-DATE, reclaimed) rows: batches are 1 + the number of crashed predecessor
-cycles, dates are bounded by the retention window's calendar days, not by
-file count. File selection happens distributed: glob the claimed dates,
-then semi-join the scan's `input_file_name()` lineage against
-the claimed filenames.
+Scale contract: the driver holds one row per claimed file, collected once
+per cycle; the scan's file index already holds one path per listed file
+on the JVM side. No tick row reaches the driver.
 
 Exactly-once contract: every claimed file carries a `sink_batch` — the
 idempotence key its rows are written under. Fresh claims use the current
@@ -44,14 +44,13 @@ from __future__ import annotations
 
 import logging
 import os
+from urllib.parse import unquote
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, Window, functions as F
 
-from ..functions.localrel import local_values_df
 from ..sinks.writers import Sink
 from ..sources.csv_ingest import read_ticks_csv
-from ..sources.fs_scan import path_to_registry_cols
 
 logger = logging.getLogger(__name__)
 
@@ -109,88 +108,69 @@ def run_upload_batch(
     `claimed` rows carry (filename, create_date, status, sink_batch): the
     rows `claim_ready_files` gives a non-null `sink_batch`.
 
-    Writes one sink batch per distinct `sink_batch` group (normally exactly
-    one; one extra per crashed predecessor being retried), each under its
-    own idempotence key. Whole-group failure falls back to per-file
-    isolation (reference bundle semantics, TickersDataLoader.java:160-168).
+    The claim rows are collected once and grouped by `sink_batch` on the
+    driver. Each group is one sink write under its own idempotence key
+    (normally exactly one group; one extra per crashed predecessor being
+    retried). Whole-group failure falls back to per-file isolation
+    (reference bundle semantics, TickersDataLoader.java:160-168). The
+    outcome is a projection of `claimed`: `ok` is false for the names that
+    did not load.
     """
-    # A file an earlier attempt claimed (reclaimed IN_PROGRESS, or a
-    # FINISHED companion) may already have rows committed under its batch.
-    # The retry's chunks follow the CSV scan's packing, which unclaimed
-    # files in the same date directories also shape, so its dedup tokens
-    # need not repeat the first attempt's: such a batch is reset first.
-    # bounded collect: one row per (sink batch, claimed DATE, reclaimed)
-    dates: dict[int, list[str]] = {}
-    reset: set[int] = set()
-    for g, d, reclaimed in claimed.select(
-        "sink_batch", "create_date",
-        F.col("status") != "READY_FOR_PROCESSING",
-    ).distinct().collect():
-        dates.setdefault(g, []).append(str(d))
-        if reclaimed:
-            reset.add(g)
-    if not dates:
-        return local_values_df(
-            spark, [],
-            "filename string, create_date date, sink_batch long, ok boolean",
-        )
-    outcomes: DataFrame | None = None
-    for g in sorted(dates):
-        grp = claimed.filter(F.col("sink_batch") == g)
-        out = _upload_group(spark, grp, sorted(set(dates[g])), root, sink, g,
-                            g in reset)
-        outcomes = out if outcomes is None else outcomes.unionByName(out)
-    return outcomes
-
-
-def _basename(col):
-    return F.element_at(F.split(col, "/"), -1)
+    groups: dict[int, list[Row]] = {}
+    for r in claimed.select(
+        "sink_batch", "create_date", "filename", "status"
+    ).collect():
+        groups.setdefault(r["sink_batch"], []).append(r)
+    failed: list[str] = []
+    for g in sorted(groups):
+        failed += _upload_group(spark, groups[g], root, sink, g)
+    return claimed.select(
+        "filename", "create_date", "sink_batch",
+        (~F.col("filename").isin(failed)).alias("ok"),
+    )
 
 
 def _upload_group(
     spark: SparkSession,
-    claimed: DataFrame,
-    dates: list[str],
+    rows: list[Row],
     root: str,
     sink: Sink,
     sink_batch: int,
-    reset: bool,
-) -> DataFrame:
-    rows = claimed.select("filename", "create_date", "sink_batch")
-    # the one glob: it matches only the date directories that exist, and
-    # binaryFile prunes `content`, so listing it opens no file
+) -> list[str]:
+    """Write one sink batch's claimed `rows`; return the claimed names that
+    did not load."""
+    claimed = {(str(r["create_date"]), r["filename"]) for r in rows}
+    dates = sorted({d for d, _ in claimed})
     glob = os.path.join(root, "{" + ",".join(dates) + "}", "*")
     try:
         try:
-            listed = spark.read.format("binaryFile").load(glob).select("path")
+            scan = read_ticks_csv(spark, glob)
         except AnalysisException as exc:
             if exc.getCondition() != "PATH_NOT_FOUND":
                 raise
             logger.warning("no claimed date directory left: %s", glob)
-            return rows.withColumn("ok", F.lit(False))
-        ticks = (
-            read_ticks_csv(spark, glob)
-            .withColumn("filename", _basename(F.col("_source_file")))
-            .drop("_source_file")
-            # lineage join: keep only claimed files (the glob may sweep in
-            # same-day files that are not READY yet); filenames are globally
-            # unique (the registry dedups on filename), so basename suffices
-            .join(claimed.select("filename"), "filename", "left_semi")
-        )
-        if reset:
+            return [f for _, f in claimed]
+        # the glob also lists same-day files that are not claimed (not
+        # READY yet); the index's paths are URI-encoded, the claim's names
+        # decoded
+        found = {}
+        for path in scan.inputFiles():
+            key = tuple(unquote(p) for p in path.rsplit("/", 2)[-2:])
+            if key in claimed:
+                found[key] = path
+        # A file an earlier attempt claimed (reclaimed IN_PROGRESS, or a
+        # FINISHED companion) may already have rows committed under its
+        # batch. The retry's chunks follow the CSV scan's packing, which
+        # unclaimed files in the same date directories also shape, so its
+        # dedup tokens need not repeat the first attempt's: reset first.
+        if any(r["status"] != "READY_FOR_PROCESSING" for r in rows):
             sink.reset_batch(sink_batch)
-        sink.write(ticks.drop("filename"), batch_id=sink_batch)
-        # ok comes from the listing, not assumed: a claimed file it does
-        # not hold committed zero rows and rolls up ERROR, not FINISHED.
-        # (create_date, filename) names one path, so each claim row keeps
-        # exactly one outcome.
-        seen = path_to_registry_cols(listed).select(
-            "create_date", "filename", F.lit(True).alias("ok")
+        sink.write(
+            scan.filter(F.col("_source_file").isin(sorted(found.values())))
+            .drop("_source_file"),
+            batch_id=sink_batch,
         )
-        return rows.join(seen, ["create_date", "filename"], "left").select(
-            "filename", "create_date", "sink_batch",
-            F.coalesce("ok", F.lit(False)).alias("ok"),
-        )
+        return [f for d, f in claimed if (d, f) not in found]
     except Exception:
         logger.exception(
             "upload batch %s failed; isolating per file", sink_batch
@@ -201,10 +181,8 @@ def _upload_group(
     # parseable set in a SINGLE sink write. One write per sink_batch is what
     # keeps the idempotent (dynamic-partition-overwrite) sink exactly-once —
     # multiple writes under the same batch_id would clobber each other.
-    # Collecting the (date, filename) pairs here is the RARE failure path,
-    # never the hot path.
     good_dfs, good_files, committed = [], [], []
-    for r in claimed.select("create_date", "filename").collect():
+    for r in rows:
         f = r["filename"]
         try:
             one = read_ticks_csv(
@@ -234,4 +212,4 @@ def _upload_group(
             committed = good_files
         except Exception:
             logger.exception("retry write for batch %s failed", sink_batch)
-    return rows.withColumn("ok", F.col("filename").isin(committed))
+    return [r["filename"] for r in rows if r["filename"] not in committed]

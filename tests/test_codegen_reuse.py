@@ -54,8 +54,8 @@ def test_second_analytics_pass_compiles_nothing(spark, sf_dir):
 def test_warm_service_cycle_reuses_its_classes(spark, tmp_path):
     """A cycle over new files runs the plans of the cycle before it: the
     third of three cycles over a day directory that gains files before
-    each one compiles at most 30 classes (28 in a fresh JVM, 20 from the
-    fourth cycle on; Spark's default cache of 100: about 70). What still
+    each one compiles at most 30 classes (12 in a fresh JVM, and 12 in
+    each later cycle; Spark's default cache of 100: about 70). What still
     compiles are plans that carry the cycle number as a literal."""
     from crypto_data_service_loader_spark.sinks.clickhouse_http import (
         ClickHouseHttpSink,

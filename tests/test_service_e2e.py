@@ -272,13 +272,38 @@ def test_upload_returns_one_row_per_claimed_row(spark, tmp_path):
     assert gone.write_calls == 0
 
 
+def test_cycle_loads_file_names_that_need_uri_escaping(spark, tmp_path):
+    """The CSV scan spells a path URI-encoded (`A%20B`, `C%25D`, `E%23F`)
+    and the registry holds the decoded name, so a claimed file whose name
+    holds a space, `%` or `#` must still land each valid row once and end
+    FINISHED, like a plain one."""
+    root, reg = str(tmp_path / "data"), str(tmp_path / "reg")
+    names = {f"{t}_PST_2024-03-12": t for t in ("A B", "C%D", "E#F", "PLAIN")}
+    _mk_tree(root, {"2024-03-12": {
+        name: [f"{t},{i},0.5,10,0.51,5,0.49,7,1710400000000"
+               for i in range(3)] + [INVALID]
+        for name, t in names.items()
+    }})
+    sink = MemorySink()
+    stats = run_cycle(spark, root, reg, sink, today="2024-03-14", cycle=0)
+    assert stats["uploaded"] == 4 and stats["failed"] == 0
+    stored = sorted((r["ticker"], r["sequence"])
+                    for _, rows in sink.batches for r in rows)
+    assert stored == sorted((t, i) for t in names.values() for i in range(3))
+    state = {r["filename"]: r["status"]
+             for r in RegistryLog(spark, reg).state().collect()}
+    assert state == {name: "FINISHED" for name in names}
+
+
 def test_warm_cycle_job_budget(spark, tmp_path):
     """A warm `run_cycle` (10 new files in 2 new past-date directories,
-    HTTP sink, cleanup on) runs at most 15 Spark jobs: the state window
+    HTTP sink, cleanup on) runs at most 12 Spark jobs: the state window
     runs once, over the log and the listing, and discover, progress,
-    claim and cleanup all read its one pinned frame. The log gains one
-    file per append, two per cycle. Every file ends FINISHED and every
-    row lands once."""
+    claim and cleanup all read its one pinned frame; the upload runs one
+    control collect and one sink write, and settles its files from the
+    CSV scan's own file index, with no join. The log gains one file per
+    append, two per cycle. Every file ends FINISHED and every row lands
+    once."""
     from crypto_data_service_loader_spark.sinks.clickhouse_http import (
         ClickHouseHttpSink,
     )
@@ -322,7 +347,7 @@ def test_warm_cycle_job_budget(spark, tmp_path):
         fake.stop()
     state = RegistryLog(spark, reg).state()
     assert state.filter(F.col("status") != "FINISHED").count() == 0
-    assert jobs[2] <= 15, jobs
+    assert jobs[2] <= 12, jobs
     assert parts == [2, 2, 2], parts
 
 

@@ -51,8 +51,7 @@ def _tree(root, n_files=6, rows=30):
 
 def _claimed(spark, tmp_path, names, batch=5):
     """The claim set as `run_cycle` hands it over: a plan over the parquet
-    registry log, pinned by `localCheckpoint` (which keeps the scan's size
-    estimate, so the planner broadcasts it into the semi-join)."""
+    registry log, pinned by `localCheckpoint`."""
     path = str(tmp_path / "claimed")
     spark.createDataFrame(
         [(n, d, "READY_FOR_PROCESSING", batch) for n, d in names],
@@ -72,7 +71,8 @@ def _fake_sink():
 
 def test_upload_write_plan_has_no_exchange(spark, tmp_path, monkeypatch):
     """The sink's write job reads the CSV scan and POSTs from its
-    partitions: no shuffle exchange and no sort anywhere in the plan."""
+    partitions: no shuffle exchange, no sort and no join anywhere in the
+    plan (the claimed files are picked by their paths, not joined)."""
     root = str(tmp_path / "data")
     claimed = _claimed(spark, tmp_path, _tree(root))
     plans = []
@@ -97,6 +97,7 @@ def test_upload_write_plan_has_no_exchange(spark, tmp_path, monkeypatch):
     shuffles = [ln for ln in plan.splitlines() if _SHUFFLE.match(ln)]
     assert not shuffles, plan
     assert not re.search(r"^[\s:+*\-()0-9]*Sort \[", plan, re.M), plan
+    assert "Join" not in plan, plan
 
 
 def test_small_batch_posts_at_most_default_parallelism(spark, tmp_path):
